@@ -6,8 +6,9 @@ JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 
 Each query is forced with a full collect (the driver's correctness path
 materializes results too, so timings reflect end-to-end work, not just
-plan time). A warm-up pass on sf0.001 triggers JVM/codegen warmup so the
-numbers measure the queries, not JIT.
+plan time). A warm-up pass at the target scale triggers JVM/codegen warmup
+so the numbers measure the queries, not JIT; a query whose warm-up raises
+is reported and left out of timing.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import os
 import re
 import sys
 import time
+import traceback
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -253,7 +255,9 @@ def _emit(
     sf: float,
     details: dict[str, dict[str, float]] | None = None,
     probe_ms: float | None = None,
+    failures: dict[str, str] | None = None,
 ) -> None:
+    failures = failures or {}
     total = round(sum(timings.values()), 3)
     full = {
         "metric": "headline_queries_total_wall",
@@ -267,6 +271,7 @@ def _emit(
         "queries_detail": details
         or {n: {"best": t, "spread": 1.0} for n, t in timings.items()},
         "sf": sf,
+        "warmup_failures": failures,  # {name: exception type}
     }
     if probe_ms is not None:
         full["vm_probe_ms"] = probe_ms
@@ -288,6 +293,7 @@ def _emit(
         "queries": reported,
         "sf": sf,
         "queries_benched": len(timings),
+        "warmup_failed": len(failures),
         "core_total": round(sum(timings[n] for n in core), 3),
         "full": "BENCH_FULL.json",
     }
@@ -305,6 +311,22 @@ def _emit(
     print(line)
 
 
+def _warm_up(spark, sf_dir: str, queries, names: list[str]) -> dict[str, str]:
+    """One un-timed pass per query at the TARGET scale (JVM JIT, codegen
+    caches, parquet footers, OS page cache), so the timed passes measure
+    steady-state cost, not first-touch setup. Returns ``{name: exception
+    type}`` of the queries that raised, each also reported on stderr."""
+    failures: dict[str, str] = {}
+    for n in names:
+        try:
+            _force(queries[n](spark, sf_dir))
+        except Exception as exc:
+            failures[n] = type(exc).__name__
+            print(f"bench: warm-up of {n} failed:", file=sys.stderr)
+            traceback.print_exc()
+    return failures
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -314,20 +336,8 @@ def main() -> None:
 
     queries = registry.all_queries()
     names = [n for n in HEADLINE if n in queries]
-    # One-off adjudication mode: bench ONLY the core-20 set so its numbers
-    # are free of the 70+-query run-shape noise (GC/cache interleaving).
-    if os.environ.get("SPARK_GRAFT_BENCH_CORE"):
-        names = names[:CORE]
-
-    # Warm-up: one un-timed pass per query at the TARGET scale — JVM JIT,
-    # codegen caches, parquet footers, OS page cache. The timed pass then
-    # measures steady-state query cost (what repeats on a long-lived
-    # cluster), not first-touch setup.
-    for n in names:
-        try:
-            _force(queries[n](spark, sf_dir))
-        except Exception:
-            pass
+    failures = _warm_up(spark, sf_dir, queries, names)
+    names = [n for n in names if n not in failures]
 
     # min-of-3: single-pass timings on this box vary up to 3x run-to-run
     # (measured round 4: nation_top_customers 0.39..1.69s across clean
@@ -365,7 +375,7 @@ def main() -> None:
             "spread": round(max(samples) / best, 3) if best > 0 else 1.0,
         }
 
-    _emit(timings, names, sf, details, probe_ms)
+    _emit(timings, names, sf, details, probe_ms, failures)
 
 
 if __name__ == "__main__":

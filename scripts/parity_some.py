@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 import sys
 import time
+from itertools import zip_longest
 from pathlib import Path
 
 import duckdb
@@ -51,7 +52,7 @@ def main() -> None:
         sdf = qs[name](spark, sf_dir).toPandas()
         odf = con.execute(sql).df()
         cols = sorted(sdf.columns)
-        ok = cols == sorted(odf.columns)
+        same_cols = cols == sorted(odf.columns)
         s_rows = sorted(
             tuple(norm(v) for v in r) for r in sdf[cols].itertuples(index=False)
         )
@@ -60,14 +61,17 @@ def main() -> None:
                 tuple(norm(v) for v in r)
                 for r in odf[cols].itertuples(index=False)
             )
-            if ok
+            if same_cols
             else []
         )
-        ok = ok and s_rows == o_rows
-        print(f"{'OK  ' if ok else 'FAIL'} {name}: spark={len(s_rows)} oracle={len(o_rows)}")
+        ok = same_cols and s_rows == o_rows
+        print(f"{'OK  ' if ok else 'FAIL'} {name}: spark={len(sdf)} oracle={len(odf)}")
         if not ok:
             bad.append(name)
-            for i, (a, b) in enumerate(zip(s_rows, o_rows)):
+        if not same_cols:
+            print("  columns: spark", cols, "vs oracle", sorted(odf.columns))
+        else:
+            for a, b in zip_longest(s_rows, o_rows):
                 if a != b:
                     print("  first diff:", a, "vs", b)
                     break

@@ -11,10 +11,10 @@ import contextlib
 import bench
 
 
-def _emit_line(timings, names):
+def _emit_line(timings, names, **kw):
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        bench._emit(timings, names, sf=0.1)
+        bench._emit(timings, names, sf=0.1, **kw)
     return buf.getvalue().strip().splitlines()[-1]
 
 
@@ -77,3 +77,28 @@ def test_emit_reports_slowest_of_the_rest_first(tmp_path, monkeypatch):
     # plenty of room -> both fit; but ordering guarantees the slow one
     # would survive truncation
     assert "slow_extra" in parsed["queries"]
+
+
+def test_warm_up_failure_is_recorded(tmp_path, monkeypatch, capsys):
+    class _Rows:
+        def count(self):
+            return 1
+
+    def broken(spark, sf_dir):
+        raise ValueError("bad input")
+
+    queries = {"ok_query": lambda spark, sf_dir: _Rows(), "broken_query": broken}
+    failures = bench._warm_up(None, "sf", queries, list(queries))
+    assert failures == {"broken_query": "ValueError"}
+    err = capsys.readouterr().err
+    assert "warm-up of broken_query failed" in err and "ValueError: bad input" in err
+
+    monkeypatch.setattr(
+        bench, "__file__", str(tmp_path / "bench.py"), raising=False
+    )
+    names = bench.HEADLINE[: bench.CORE]
+    line = _emit_line({n: 0.5 for n in names}, names, failures=failures)
+    assert len(line) <= bench.LINE_BUDGET
+    assert json.loads(line)["warmup_failed"] == 1
+    full = json.loads((tmp_path / "BENCH_FULL.json").read_text())
+    assert full["warmup_failures"] == {"broken_query": "ValueError"}

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from week5_datingnlp_big_data_spark.operators import corpus, dfm, freq
+from week5_datingnlp_big_data_spark.operators import corpus, dfm, freq, tfidf
 
 
 def test_select_essays_projects_prefix(spark):
@@ -138,6 +138,16 @@ def test_doc_term_counts_duplicate_tokens(spark):
     assert out == {(1, "a"): 3, (1, "b"): 1, (2, "b"): 1}
 
 
+def test_unstemmed_tokenize_dfm_tfidf_chain(spark, sf_dir):
+    from week5_datingnlp_big_data_spark.sources.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    toked = corpus.tokenize_corpus(docs, stem=False)
+    weighted = tfidf.tf_idf(dfm.doc_term_counts(toked))
+    assert {"doc_id", "term", "tfidf"} <= set(weighted.columns)
+    assert weighted.count() > 0
+
+
 def test_chunk_documents_window_semantics(spark):
     from week5_datingnlp_big_data_spark.operators import corpus
 
@@ -188,6 +198,7 @@ def test_chunk_documents_coverage_invariant(spark, sf_dir):
     )
     joined = n_words.join(agg, "doc_id")
     assert joined.count() > 0
+    assert chunks.count() > docs.count()  # long docs split into several windows
     assert joined.filter(F.col("covered") != F.col("n")).count() == 0
 
 

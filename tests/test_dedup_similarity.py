@@ -32,6 +32,12 @@ def test_exact_dedup_groups(dup_docs):
     assert out.agg(F.sum("n_copies")).first()[0] == 6
 
 
+def test_dup_cluster_sizes_accounts_for_every_doc(dup_docs):
+    rows = {r["cluster_size"]: r for r in dedup.dup_cluster_sizes(dup_docs).collect()}
+    assert 1 in rows  # the singleton row is always present
+    assert sum(r["n_docs"] for r in rows.values()) == dup_docs.count()
+
+
 def test_minhash_finds_planted_near_dups(dup_docs):
     pairs = dedup.jaccard_near_dups(dup_docs, threshold=0.5)
     found = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
@@ -712,6 +718,7 @@ def test_persisted_band_index_matches_self_contained(spark, sf_dir, tmp_path):
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     idx_path = str(tmp_path / "band_index.parquet")
     idx = dedup.build_near_dup_index(base, idx_path)
+    assert set(idx.columns) == {"doc_id", "band_idx", "band_key"}
     # the artifact is band_idx-partitioned on disk (each band's probe
     # join confined to its own files)
     import os

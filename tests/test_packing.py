@@ -18,10 +18,9 @@ def test_pack_sequences_hand_computed(spark):
         (2, 0, 50), (3, 0, 20),
     ]
     chunks = spark.createDataFrame(rows, "doc_id long, chunk_idx long, n_tokens long")
-    out = {
-        (r["bucket"], r["seq_id"]): r
-        for r in corpus.pack_sequences(chunks, seq_len=32, n_buckets=1).collect()
-    }
+    packed = corpus.pack_sequences(chunks, seq_len=32, n_buckets=1)
+    assert set(packed.columns) == {"bucket", "seq_id", "n_chunks", "seq_tokens"}
+    out = {(r["bucket"], r["seq_id"]): r for r in packed.collect()}
     assert set(out) == {(0, 0), (0, 2)}
     assert out[(0, 0)]["n_chunks"] == 4 and out[(0, 0)]["seq_tokens"] == 80
     assert out[(0, 2)]["n_chunks"] == 1 and out[(0, 2)]["seq_tokens"] == 20

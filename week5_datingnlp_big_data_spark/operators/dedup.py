@@ -935,11 +935,11 @@ def connected_components(
     # NOTE (optimization r9, tried and rejected): symmetrizing via a
     # single-pass explode-into-both-directions instead of this
     # union-of-swapped-selects was measured (matched sessions, controls
-    # for drift): jobs dropped (26→22 on near_dup_components) but wall
-    # time was control-normalized flat-to-worse — the near-dup callers
+    # for drift): near_dup_components went from 26 to 22 jobs but its
+    # best wall time from 2.51 s to 3.64 s (controls: host_link_pagerank
+    # 1.68→1.67 s, minhash_near_dups 1.47→1.76 s) — the near-dup callers
     # persist the pair table, so the second union arm is a cache read,
     # not a recompute, and the two arms' map sides run in parallel.
-    # Kept as-is; see plans/r09/measurements/sym_{before,after}.json.
     sym = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .unionByName(

@@ -666,6 +666,13 @@ def quality_ensemble(
     per signal. Only the scan-speed heuristic features read the text a
     second time. Signal values are bit-identical to the standalone
     ``repetition_scores`` / ``unigram_logprob_scores`` operators.
+
+    Cache lifetime: the call runs one Spark job eagerly (it materializes
+    the per-doc signal join), and that joined cache entry is never
+    unpersisted — the returned plan reads it. The entry lives until the
+    caller runs ``spark.catalog.clearCache()``; calls on distinct inputs
+    each leave one entry behind, while a repeat call on the same input
+    reuses the existing one.
     """
     from pyspark.sql import Window
 

@@ -56,20 +56,17 @@ def inverse_doc_frequency(counts: DataFrame, n_docs: int | None = None) -> DataF
     )
 
 
-def tf_idf(counts: DataFrame, n_docs: int | None = None, persist: bool = True) -> DataFrame:
+def tf_idf(counts: DataFrame, n_docs: int | None = None) -> DataFrame:
     """A9 — ``(doc_id, term, tf, idf, tfidf)``. The per-term IDF side is
     |vocab|-sized and grows with the corpus → hash-keyed join onto the
     doc×term table with no forced broadcast (AQE broadcasts it whenever
     the measured size permits, which is every sub-crawl-scale run).
 
     The counts DAG feeds three consumers (TF window, IDF aggregate, and
-    the N-docs count when ``n_docs`` is None) — without ``persist`` the
-    whole upstream tokenize+explode+groupBy pipeline runs three times. At
-    cluster scale prefer persisting (or checkpointing) the long-form
-    counts before fan-out; pass ``persist=False`` only for one-shot lazy
-    composition."""
-    if persist:
-        counts = counts.persist()
+    the N-docs count when ``n_docs`` is None), so ``counts`` is always
+    persisted first; otherwise the whole upstream tokenize+explode+groupBy
+    pipeline would run three times. The cache entry outlives the call."""
+    counts = counts.persist()
     tf = term_frequency(counts)
     idf = inverse_doc_frequency(counts, n_docs)
     return (
