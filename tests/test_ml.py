@@ -104,3 +104,25 @@ def test_hashed_features_signed_collision_cancel(spark):
     # unsigned mode counts plainly
     uns = hashed_features(docs, n_buckets=8, signed=False).collect()
     assert sum(r["val"] for r in uns) == 3
+
+
+def test_naive_bayes_nul_label_fails_with_named_error(spark):
+    # The scorer keys its per-doc token total under a NUL map key; a NUL
+    # class label must fail on that invariant by name, not as a
+    # map_concat duplicate-key error.
+    import pytest
+
+    from week5_datingnlp_big_data_spark.operators.ml import (
+        naive_bayes_model, naive_bayes_score,
+    )
+
+    train = spark.createDataFrame(
+        [("\x00", ["buy", "cheap"]), ("ham", ["meeting", "lunch"])],
+        "label string, tokens array<string>",
+    )
+    model, priors = naive_bayes_model(train)
+    test = spark.createDataFrame(
+        [(1, ["cheap", "lunch"])], "doc_id long, tokens array<string>"
+    )
+    with pytest.raises(Exception, match="NUL sentinel"):
+        naive_bayes_score(test, model, priors).collect()

@@ -6,6 +6,7 @@ recover the planted gendered vocabulary, k-means cost decreases with k."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +39,85 @@ def test_ep1_split_is_stratified_and_disjoint(ep1):
         props = {r["label"]: r["prop"] for r in ml.label_proportions(side, "label").collect()}
         for lab, p in props.items():
             assert abs(p - full[lab]) < 0.06, (lab, p, full[lab])
+
+
+def test_stratified_split_equals_sample_by(spark):
+    # The split's train side is filter(rand(seed) < f); with one fraction
+    # for every label that keeps exactly sampleBy's rows.
+    df = spark.createDataFrame(
+        [(i, ("m", "f", "x")[i % 3]) for i in range(400)],
+        "doc_id long, label string",
+    ).cache()
+    train, test = ml.stratified_split(df, "doc_id", 0.7, 32984)
+    by = df.stat.sampleBy("label", {"m": 0.7, "f": 0.7, "x": 0.7}, 32984)
+    ids = lambda d: sorted(r[0] for r in d.select("doc_id").collect())  # noqa: E731
+    assert ids(train) == ids(by)
+    assert sorted(ids(train) + ids(test)) == list(range(400))
+    df.unpersist()
+
+
+def test_stratified_split_samples_null_labels(spark):
+    # sampleBy rejects a NULL key in its fractions; the split does not,
+    # and it stays disjoint and exhaustive with a NULL-label row present.
+    df = spark.createDataFrame(
+        [(i, None if i == 0 else ("m", "f")[i % 2]) for i in range(50)],
+        "doc_id long, label string",
+    ).cache()
+    train, test = ml.stratified_split(df, "doc_id", 0.7, 7)
+    tr = {r[0] for r in train.select("doc_id").collect()}
+    te = {r[0] for r in test.select("doc_id").collect()}
+    assert not tr & te and tr | te == set(range(50))
+    df.unpersist()
+
+
+def test_ep1_vocabulary_matches_spark_ordering(spark):
+    # Python-side sort by (-tf, term) == orderBy(desc(tf), term); four
+    # extra profiles plant three terms with equal totals, so the term
+    # tiebreak is exercised
+    base = make_profiles(spark, n_rows=120)
+    ties = [
+        r.asDict() | {"doc_id": 1000 + i, "essay0": "zephyr quokka marimba"}
+        for i, r in enumerate(base.limit(4).collect())
+    ]
+    r = pipelines.ep1_classification(
+        base.unionByName(spark.createDataFrame(ties, base.schema))
+    )
+    ordered = (
+        r.counts.groupBy("term").agg(F.sum("count").alias("tf"))
+        .orderBy(F.desc("tf"), "term").collect()
+    )
+    tfs = [row["tf"] for row in ordered]
+    assert len(set(tfs)) < len(tfs)
+    assert r.vocabulary == [row["term"] for row in ordered]
+
+
+def test_ep1_accuracy_is_confusion_diagonal_share(ep1):
+    cells = ep1.confusion.collect()
+    n = sum(c["n"] for c in cells)
+    hit = sum(c["n"] for c in cells if c["predicted"] == c["actual"])
+    assert ep1.accuracy == hit / n == ml.accuracy(ep1.predictions)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_ep2_reads_ep1_counts_cache(ep1):
+    # EP-1 leaves its trimmed DFM persisted; EP-2's TF-IDF scans that
+    # cache instead of re-running the stem-map join and the trim.
+    assert ep1.counts.storageLevel.useMemory
+    assert "InMemoryTableScan" in _executed_plan(tfidf.tf_idf(ep1.counts))
+
+
+def test_ep3_frames_read_one_shared_aggregate(profiles):
+    res = pipelines.ep3_word_analysis(profiles, top_k=25, distinct_k=40)
+    shared = re.compile(r"InMemoryRelation \[sex#\d+, word#\d+, cnt#\d+L\]")
+    for df in (res.male_top, res.female_top,
+               res.distinctive_male, res.distinctive_female):
+        plan = _executed_plan(df)
+        # every top-k ranking scans the cached (sex, word, cnt) aggregate
+        assert "InMemoryTableScan" in plan, plan
+        assert len(shared.findall(plan)) == plan.count("TakeOrderedAndProject") > 0, plan
 
 
 def test_ep1_tree_beats_majority_baseline(ep1):

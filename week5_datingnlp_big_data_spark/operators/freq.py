@@ -14,7 +14,7 @@ single hash shuffle on ``word``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from week5_datingnlp_big_data_spark.functions.text import split_raw, tokenize
@@ -31,15 +31,19 @@ def explode_words(docs: DataFrame, text_col: str = "text", *, raw: bool = True) 
     return explode_tokens(docs, words, "word")
 
 
-def word_counts(docs: DataFrame, text_col: str = "text", *, raw: bool = True) -> DataFrame:
-    """A5+T1 — ``(word, cnt)`` ranked descending, word ascending as the
+def _ranked(counts: DataFrame) -> DataFrame:
+    """T1 — ``(word, cnt)`` ranked descending, word ascending as the
     deterministic tiebreak (the reference's ``sort`` is stable; an explicit
     tiebreak keeps top-k reproducible under parallel execution)."""
-    return (
+    return counts.orderBy(F.desc("cnt"), F.asc("word"))
+
+
+def word_counts(docs: DataFrame, text_col: str = "text", *, raw: bool = True) -> DataFrame:
+    """A5+T1 — ``(word, cnt)`` ranked (see ``_ranked``)."""
+    return _ranked(
         explode_words(docs, text_col, raw=raw)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("word"))
     )
 
 
@@ -48,27 +52,39 @@ def top_k_words(docs: DataFrame, k: int, text_col: str = "text", *, raw: bool = 
     return word_counts(docs, text_col, raw=raw).limit(k)
 
 
+def grouped_word_counts(docs: DataFrame, group_col: str) -> DataFrame:
+    """A5 per group, raw-split words of ``text`` (R:259) — ``(group_col,
+    word, cnt)``: every group's word counts from one aggregation, for
+    callers that rank several groups (persist it when more than one
+    ranking reads it)."""
+    from week5_datingnlp_big_data_spark.operators.corpus import explode_tokens
+
+    return (
+        explode_tokens(docs, split_raw("text"), "word", group_col)
+        .groupBy(group_col, "word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def group_top_k(counts: DataFrame, group_col: str, group: str, k: int) -> DataFrame:
+    """T2 for one group of ``grouped_word_counts``: ``(word, cnt)``,
+    TakeOrderedAndProject over that group's rows."""
+    return _ranked(
+        counts.filter(F.col(group_col) == group).select("word", "cnt")
+    ).limit(k)
+
+
 def distinctive_words(
-    docs: DataFrame,
-    group_col: Column | str,
-    group_a: str,
-    group_b: str,
-    k: int = 500,
-    text_col: str = "text",
-    *,
-    raw: bool = True,
+    counts: DataFrame, group_col: str, group_a: str, group_b: str, k: int = 500
 ) -> DataFrame:
     """T3 — words in group A's top-k absent from group B's top-k
     (reference ``setdiff(male.words[1:500], female.words[1:500])``,
-    R:278–280). Anti-join of two TakeOrderedAndProject results — both
-    sides are ≤k rows, so the join broadcasts."""
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    top_a = top_k_words(docs.filter(g == group_a), k, text_col, raw=raw)
-    top_b = top_k_words(docs.filter(g == group_b), k, text_col, raw=raw)
-    return (
-        top_a.join(F.broadcast(top_b.select("word")), "word", "left_anti")
-        .orderBy(F.desc("cnt"), F.asc("word"))
-    )
+    R:278–280), from ``grouped_word_counts`` output. Anti-join of two
+    TakeOrderedAndProject results — both sides are ≤k rows, so the join
+    broadcasts."""
+    top_a = group_top_k(counts, group_col, group_a, k)
+    top_b = group_top_k(counts, group_col, group_b, k)
+    return _ranked(top_a.join(F.broadcast(top_b.select("word")), "word", "left_anti"))
 
 
 def remove_banned_terms(counts: DataFrame, banned: DataFrame, term_col: str = "term") -> DataFrame:

@@ -81,19 +81,24 @@ def label_proportions(df: DataFrame, label_col: str = "label") -> DataFrame:
 
 def stratified_split(
     df: DataFrame,
-    label_col: str = "label",
     id_col: str = "doc_id",
     train_fraction: float = 0.7,
     seed: int = 32984,
 ) -> tuple[DataFrame, DataFrame]:
-    """M1 — per-class 70/30 split (caret createDataPartition, R:138–142;
-    same seed). ``sampleBy`` samples (Bernoulli) rather than exactly
-    partitioning, so row counts vary ~±1 %; class *proportions* are the
-    verified invariant. Test side = anti-join on the id, so the two sides
-    are disjoint and exhaustive regardless of sampling."""
-    labels = [r[0] for r in df.select(label_col).distinct().collect()]
-    fractions = {lab: train_fraction for lab in labels}
-    train = df.stat.sampleBy(label_col, fractions, seed)
+    """M1 — 70/30 split with the same rate in every class (caret
+    createDataPartition, R:138–142; same seed). Bernoulli sampling rather
+    than exact partitioning, so row counts vary ~±1 %; class *proportions*
+    are the verified invariant.
+
+    The train side is ``filter(rand(seed) < train_fraction)``, which keeps
+    exactly the rows of ``df.stat.sampleBy(label, {l: train_fraction for
+    every label l}, seed)``: Spark's ``sampleBy`` is a filter on
+    ``rand(seed) < fractions[label]``, so with one fraction for every
+    class the label drops out — no label-collecting job, and NULL-label
+    rows are sampled like any other (``sampleBy`` rejects a NULL key).
+    Test side = anti-join on the id, so the two sides are disjoint and
+    exhaustive regardless of sampling, even if a partition is recomputed."""
+    train = df.filter(F.rand(seed) < train_fraction)
     test = df.join(train.select(id_col), id_col, "left_anti")
     return train, test
 
@@ -572,15 +577,20 @@ def naive_bayes_score(
     # term-keyed join instead of two), PLUS a sentinel entry worth 1 per
     # token: its per-doc sum IS T_d, so one aggregation produces the
     # delta sums and the token total together — no separate T_d pass, no
-    # second attach join. The sentinel key is NUL, which no label can be
-    # (labels come out of groupBy keys of real columns). Map entry order
-    # follows the nondeterministic collect_list, which only permutes
-    # int64 additions.
+    # second attach join. The sentinel key is NUL, so a NUL label would
+    # collide with it: the projection fails fast with a named error
+    # (inside this plan, no extra job) rather than as a map_concat
+    # duplicate-key error. Map entry order follows the nondeterministic
+    # collect_list, which only permutes int64 additions.
     sent = "\x00"
+    label = F.when(
+        F.col("label") == sent,
+        F.raise_error(F.lit("naive_bayes_score: a class label equals the NUL sentinel")),
+    ).otherwise(F.col("label"))
     term_info = model.observed.groupBy("term").agg(
         F.map_concat(
             F.create_map(F.lit(sent), F.lit(1).cast("long")),
-            F.map_from_entries(F.collect_list(F.struct("label", "delta"))),
+            F.map_from_entries(F.collect_list(F.struct(label.alias("label"), "delta"))),
         ).alias("_dmap")
     )
     g = (

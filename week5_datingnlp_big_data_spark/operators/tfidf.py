@@ -65,7 +65,10 @@ def tf_idf(counts: DataFrame, n_docs: int | None = None) -> DataFrame:
     The counts DAG feeds three consumers (TF window, IDF aggregate, and
     the N-docs count when ``n_docs`` is None), so ``counts`` is always
     persisted first; otherwise the whole upstream tokenize+explode+groupBy
-    pipeline would run three times. The cache entry outlives the call."""
+    pipeline would run three times. The cache entry outlives the call.
+    ``counts`` may already be cached (EP-1 leaves its trimmed DFM
+    persisted): the ``persist()`` is then a no-op and all three consumers
+    read the caller's entry."""
     counts = counts.persist()
     tf = term_frequency(counts)
     idf = inverse_doc_frequency(counts, n_docs)

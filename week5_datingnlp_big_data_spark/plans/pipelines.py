@@ -7,8 +7,18 @@ EP-3 frequency analysis + unsupervised (R:258–326)
 
 The reference materializes eagerly at every step (33 GB peak); here each
 pipeline is declared lazily and only the terminal artifacts materialize.
-The tokenized corpus is cached once and shared — the analog of the
-reference keeping `all.tokens` alive across its three sections.
+Every intermediate that two actions read is built once and cached — the
+analog of the reference keeping `all.tokens` and its trimmed DFM alive
+across its three sections (R:105 → R:234).
+
+Caches left for the caller (release them, e.g. ``spark.catalog
+.clearCache()``, once the results are consumed):
+
+- EP-1: the unstemmed token arrays, the distinct-term stem map, the
+  trimmed DFM (``EP1Result.counts`` — EP-2's ``tf_idf(counts)`` reads it),
+  the labeled feature vectors, ``train``, ``test`` and ``confusion``;
+- EP-3: the per-sex ``(sex, word, cnt)`` aggregate behind all four of
+  its frames.
 """
 
 from __future__ import annotations
@@ -90,15 +100,17 @@ def ep1_classification(
         .filter(F.length("_term") >= 2)
         .select("doc_id", "_pos", "_term")
     )
+    # Persisted: the vocabulary collect below fills it, and EP-2's
+    # tf_idf(counts) reads it instead of re-running the stem-map join and
+    # the trim.
     counts = dfm.trim_vocabulary(
         stemmed.groupBy("doc_id", F.col("_term").alias("term")).agg(
             F.count(F.lit(1)).alias("count")
         ),
         min_docfreq,
         min_termfreq,
-    )
-    # Stemmed token arrays (EP1Result.tokenized contract) — lazy; only
-    # materializes if a consumer (EP-2) asks.
+    ).persist()
+    # Stemmed token arrays (EP1Result.tokenized contract).
     _as_arrays = lambda df: df.groupBy("doc_id").agg(  # noqa: E731
         F.transform(
             F.array_sort(F.collect_list(F.struct("_pos", "_term"))),
@@ -120,33 +132,26 @@ def ep1_classification(
     # scan. Post-trim vocabulary is bounded (Heaps' law + df/tf floors),
     # so collecting it into the model's broadcast dictionary stays small
     # even at 100 TB corpus scale — the same driver-side footprint a
-    # fitted CountVectorizerModel carries.
-    vocab_rows = (
-        counts.groupBy("term")
-        .agg(F.sum("count").alias("_tf"))
-        .orderBy(F.desc("_tf"), "term")
-        .select("term")
-        .collect()
-    )
-    vocab = [r["term"] for r in vocab_rows]
-    # Persisted: transform and the split's label scan each consume it.
-    vec_input = tokenized.persist()
-    vectorized = ml.vectorize_with_vocabulary(vec_input, vocab)
+    # fitted CountVectorizerModel carries. Sorted in Python, since the
+    # list is collected anyway: no range-partition sample job, no sort
+    # stage. Python compares str by codepoint, which is Spark's UTF-8
+    # binary string order, so the ties break as orderBy(desc(tf), term).
+    term_tf = counts.groupBy("term").agg(F.sum("count").alias("_tf")).collect()
+    vocab = [r["term"] for r in sorted(term_tf, key=lambda r: (-r["_tf"], r["term"]))]
+    vectorized = ml.vectorize_with_vocabulary(tokenized, vocab)
 
     # Narrow to the modeling columns and persist BEFORE the split: the
     # split's two sides would otherwise each re-run the vectorize
-    # transform over the full corpus (sampleBy is narrow but the anti-join
-    # side re-reads the whole chain). One materialization, both sides
-    # read the cache; the text columns stay out of executor memory.
+    # transform over the full corpus (the sample filter is narrow but the
+    # anti-join side re-reads the whole chain). One materialization, both
+    # sides read the cache; the text columns stay out of executor memory.
     labeled = vectorized.select(
         "doc_id", F.col("sex").alias("label"), "features"
     ).persist()
-    train, test = ml.stratified_split(
-        labeled, "label", "doc_id", train_fraction, seed
-    )
-    # Persist both splits: fit, predict, confusion, and accuracy are
-    # separate actions — without this each one re-runs the tokenize →
-    # vectorize chain (measured ~2x the whole pipeline at 60k docs).
+    train, test = ml.stratified_split(labeled, "doc_id", train_fraction, seed)
+    # Persist both splits: fit, predict and the evaluation are separate
+    # actions — without this each one re-runs the tokenize → vectorize
+    # chain (measured ~2x the whole pipeline at 60k docs).
     train = train.persist()
     test = test.persist()
     if stage_timings is not None:
@@ -159,9 +164,15 @@ def ep1_classification(
     if stage_timings is not None:
         stage_timings["tree_fit"] = round(_time.perf_counter() - _t0, 1)
         _t0 = _time.perf_counter()
-    pred = ml.predict(model, test).persist()
+    pred = ml.predict(model, test)
+    # One evaluation job: the confusion counts are collected once (and
+    # cached for the caller), and accuracy is their diagonal share — the
+    # same integer division ml.accuracy makes, without a pass of its own.
+    confusion = ml.confusion_matrix(pred).persist()
+    cells = confusion.collect()
+    n = sum(c["n"] for c in cells)
+    hit = sum(c["n"] for c in cells if c["predicted"] == c["actual"])
     if stage_timings is not None:
-        pred.count()
         stage_timings["predict_eval"] = round(_time.perf_counter() - _t0, 1)
     return EP1Result(
         tokenized=tokenized,
@@ -170,8 +181,8 @@ def ep1_classification(
         test=test,
         model=model,
         predictions=pred,
-        confusion=ml.confusion_matrix(pred),
-        accuracy=ml.accuracy(pred),
+        confusion=confusion,
+        accuracy=hit / n if n else 0.0,
         vocabulary=vocab,
     )
 
@@ -205,19 +216,19 @@ def ep3_word_analysis(
 ) -> EP3Result:
     """EP-3: per-sex frequency rankings (raw-split semantics, R:258–270),
     distinctive-word setdiffs (R:278–280), optional k-means sweep
-    (R:301–313) when a vectorized frame is supplied."""
+    (R:301–313) when a vectorized frame is supplied. All four rankings
+    read one persisted per-sex word count."""
     docs = corpus.profiles_to_docs(profiles)
-    male = docs.filter(F.col("sex") == "m")
-    female = docs.filter(F.col("sex") == "f")
+    counts = freq.grouped_word_counts(docs, "sex").persist()
     costs: dict[int, float] = {}
     if vectorized is not None and kmeans_ks:
         vectorized = vectorized.cache()
         for k in kmeans_ks:
             _, costs[k] = ml.kmeans_restarts(vectorized, k, seed=seed)
     return EP3Result(
-        male_top=freq.top_k_words(male, top_k),
-        female_top=freq.top_k_words(female, top_k),
-        distinctive_male=freq.distinctive_words(docs, "sex", "m", "f", distinct_k),
-        distinctive_female=freq.distinctive_words(docs, "sex", "f", "m", distinct_k),
+        male_top=freq.group_top_k(counts, "sex", "m", top_k),
+        female_top=freq.group_top_k(counts, "sex", "f", top_k),
+        distinctive_male=freq.distinctive_words(counts, "sex", "m", "f", distinct_k),
+        distinctive_female=freq.distinctive_words(counts, "sex", "f", "m", distinct_k),
         kmeans_costs=costs,
     )
