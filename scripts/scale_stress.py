@@ -128,8 +128,7 @@ def main() -> None:
 
     t0 = time.perf_counter()
     # EP-2 reuses EP-1's trimmed DFM (the reference reuses all.tokens the
-    # same way, R:234) rather than re-tokenizing from raw text; the
-    # standalone ep2_tfidf(tokenized) path stays for fresh-corpus use.
+    # same way, R:234) rather than re-tokenizing from raw text.
     from week5_datingnlp_big_data_spark.operators import tfidf as tfidf_op
 
     tfidf_rows = tfidf_op.tf_idf(r.counts).count()

@@ -142,7 +142,7 @@ def test_unstemmed_tokenize_dfm_tfidf_chain(spark, sf_dir):
     from week5_datingnlp_big_data_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toked = corpus.tokenize_corpus(docs, stem=False)
+    toked = corpus.tokenize_corpus(docs)
     weighted = tfidf.tf_idf(dfm.doc_term_counts(toked))
     assert {"doc_id", "term", "tfidf"} <= set(weighted.columns)
     assert weighted.count() > 0

@@ -1,7 +1,7 @@
 """Pure-NumPy audio codec for UNCOMPRESSED PCM WAV (RIFF/WAVE).
 
-Container-friendly "real codec" behind ``multimodal.decode_audio(
-use_real_codec=True)`` — no torchaudio/libsndfile needed: canonical WAV
+Container-friendly "real codec" behind ``multimodal.decode_audio`` and
+``audio_fingerprint`` — no torchaudio/libsndfile needed: canonical WAV
 is a RIFF chunk list with a fixed-layout ``fmt `` chunk and raw little-
 endian PCM frames in ``data``, so decode/encode is header parsing + one
 vectorized reshape (public format: Microsoft/IBM RIFF spec, WAVE format

@@ -19,6 +19,7 @@ __all__ = [
     "decode_image",
     "encode_bmp",
     "encode_ppm",
+    "repeat_tile",
     "resize_nearest",
     "sniff_format",
 ]
@@ -137,3 +138,15 @@ def resize_nearest(img: np.ndarray, target_w: int, target_h: int) -> np.ndarray:
     ys = np.minimum(((np.arange(target_h) + 0.5) * h / target_h).astype(np.int64), h - 1)
     xs = np.minimum(((np.arange(target_w) + 0.5) * w / target_w).astype(np.int64), w - 1)
     return img[ys][:, xs]
+
+
+def repeat_tile(raw: bytes, w: int, max_h: int, channels: int = 1) -> np.ndarray:
+    """Synthetic uint8 raster from a byte string: ``raw`` (non-empty)
+    repeated cyclically into ``h`` rows of ``w`` pixels, where
+    ``h = max(1, min(len(raw) // w, max_h))``. Shape ``(h, w)`` for one
+    channel, ``(h, w, channels)`` otherwise."""
+    h = max(1, min(len(raw) // w, max_h))
+    need = w * h * channels
+    buf = (raw * (need // len(raw) + 1))[:need]
+    tile = np.frombuffer(buf, dtype=np.uint8)
+    return tile.reshape((h, w) if channels == 1 else (h, w, channels))

@@ -80,13 +80,10 @@ def split_raw(c: Column | str) -> Column:
     return F.split(_col(c), " ", -1)
 
 
-def tokenize(c: Column | str, lowercase: bool = True) -> Column:
-    """N1 (+X5) — word tokenizer per the spec above. Returns
+def tokenize(c: Column | str) -> Column:
+    """N1 (+X5) — lowercasing word tokenizer per the spec above. Returns
     ``array<string>``. Pure higher-order functions: stays JVM-side."""
-    s = _col(c)
-    s = F.regexp_replace(s, "’", "'")
-    if lowercase:
-        s = F.lower(s)
+    s = F.lower(F.regexp_replace(_col(c), "’", "'"))
     toks = F.regexp_extract_all(s, F.lit(TOKEN_KEEP_PAT), F.lit(0))
     toks = F.transform(toks, lambda t: F.regexp_replace(t, TOKEN_TRIM_PAT, ""))
     return F.filter(toks, lambda t: t.rlike(TOKEN_HAS_LETTER_PAT))

@@ -14,10 +14,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from week5_datingnlp_big_data_spark.functions.stemmer import porter2_stem
+from week5_datingnlp_big_data_spark.functions import stemmer
 
 
 def register_udfs(spark: SparkSession) -> list[str]:
@@ -26,17 +25,8 @@ def register_udfs(spark: SparkSession) -> list[str]:
     - ``stem(word)``          — Snowball English stem (pandas UDF)
     - ``stem_array(tokens)``  — stem each element of an array<string>
     """
-
-    @F.pandas_udf(T.StringType())
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(lambda w: None if w is None else porter2_stem(w))
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _stem_array(s: pd.Series) -> pd.Series:
-        return s.map(lambda arr: None if arr is None else [porter2_stem(t) for t in arr])
-
-    spark.udf.register("stem", _stem)
-    spark.udf.register("stem_array", _stem_array)
+    spark.udf.register("stem", stemmer.stem_one_udf())
+    spark.udf.register("stem_array", stemmer._stem_array_udf)
     return ["stem", "stem_array"]
 
 

@@ -1,7 +1,7 @@
 """Pure-NumPy video codec for UNCOMPRESSED YUV4MPEG2 (.y4m) streams.
 
-Container-friendly "real codec" behind ``multimodal.sample_frames(
-use_real_codec=True)`` — no pyav/ffmpeg needed: y4m is a plain-text
+Container-friendly "real codec" behind ``multimodal.sample_frames`` and
+``scene_changes`` — no pyav/ffmpeg needed: y4m is a plain-text
 stream header (``YUV4MPEG2 W<w> H<h> F<num>:<den> ...``) followed by
 ``FRAME`` records of raw planar YCbCr data (public format: the mjpegtools
 YUV4MPEG2 spec). Decode is header parsing + one reshape per frame.

@@ -16,10 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from week5_datingnlp_big_data_spark.functions.stemmer import stem_tokens
 from week5_datingnlp_big_data_spark.functions.text import (
     clean_html,
-    filter_min_length,
     remove_custom_stopwords,
     remove_stopwords,
     tokenize,
@@ -49,22 +47,15 @@ def clean_text(c: Column | str) -> Column:
     return remove_custom_stopwords(clean_html(c))
 
 
-def tokenize_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    *,
-    stem: bool = True,
-    min_token_len: int = 2,
-) -> DataFrame:
-    """Full N1→N4 chain: clean → tokenize → de-stopword → stem → length
-    filter. Returns the input plus a ``tokens array<string>`` column."""
+def tokenize_corpus(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """N1+N2 chain: clean → tokenize → de-stopword, all JVM regex work.
+    Returns the input plus a ``tokens array<string>`` column. Stemming
+    (N3) and the single-char filter (N4) are left to the caller: EP-1
+    stems distinct terms only and filters after stemming, as the
+    reference does (R:86–87)."""
     from week5_datingnlp_big_data_spark.session import spread
 
-    toks = tokenize(clean_text(text_col))
-    toks = remove_stopwords(toks)
-    if stem:
-        toks = stem_tokens(toks)
-    toks = filter_min_length(toks, min_token_len)
+    toks = remove_stopwords(tokenize(clean_text(text_col)))
     return spread(docs).withColumn("tokens", toks)
 
 

@@ -17,18 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from week5_datingnlp_big_data_spark.functions.text import split_raw, tokenize
+from week5_datingnlp_big_data_spark.functions.text import split_raw
 
 
-def explode_words(docs: DataFrame, text_col: str = "text", *, raw: bool = True) -> DataFrame:
-    """A5 step 1 — one row per word occurrence.
-
-    ``raw=True`` reproduces the reference's ``str_split(" ")`` (keeps ""
-    tokens, R:259); ``raw=False`` uses the engine tokenizer."""
+def explode_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """A5 step 1 — one row per word occurrence, split as the reference's
+    ``str_split(" ")`` does (keeps "" tokens, R:259)."""
     from week5_datingnlp_big_data_spark.operators.corpus import explode_tokens
 
-    words = split_raw(text_col) if raw else tokenize(text_col)
-    return explode_tokens(docs, words, "word")
+    return explode_tokens(docs, split_raw(text_col), "word")
 
 
 def _ranked(counts: DataFrame) -> DataFrame:
@@ -38,18 +35,18 @@ def _ranked(counts: DataFrame) -> DataFrame:
     return counts.orderBy(F.desc("cnt"), F.asc("word"))
 
 
-def word_counts(docs: DataFrame, text_col: str = "text", *, raw: bool = True) -> DataFrame:
+def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """A5+T1 — ``(word, cnt)`` ranked (see ``_ranked``)."""
     return _ranked(
-        explode_words(docs, text_col, raw=raw)
+        explode_words(docs, text_col)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def top_k_words(docs: DataFrame, k: int, text_col: str = "text", *, raw: bool = True) -> DataFrame:
+def top_k_words(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     """T2 — top-k slice; Catalyst plans TakeOrderedAndProject."""
-    return word_counts(docs, text_col, raw=raw).limit(k)
+    return word_counts(docs, text_col).limit(k)
 
 
 def grouped_word_counts(docs: DataFrame, group_col: str) -> DataFrame:

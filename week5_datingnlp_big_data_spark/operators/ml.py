@@ -13,7 +13,7 @@ MLlib semantics differ from caret/rpart (sampling vs exact partition,
 minInfoGain vs cp-pruning), so tests assert *invariants* — proportions,
 accuracy bands, monotone k-means cost — never exact trees (SURVEY.md
 section 5). The feature representation is the SparseVector view produced
-by CountVectorizer from the SAME token arrays the long-form DFM uses; the
+by a CountVectorizerModel over the SAME token arrays the long-form DFM uses; the
 reference's 6.17 GB dense-matrix blowup (W2) has no analog here.
 """
 
@@ -24,27 +24,9 @@ from typing import NamedTuple
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import DecisionTreeClassifier
 from pyspark.ml.clustering import KMeans, KMeansModel
-from pyspark.ml.feature import PCA, CountVectorizer, StandardScaler, StringIndexer
+from pyspark.ml.feature import PCA, StandardScaler, StringIndexer
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def vectorize_tokens(
-    tokenized: DataFrame,
-    tokens_col: str = "tokens",
-    features_col: str = "features",
-    vocab_size: int = 1 << 18,
-    min_df: float = 1.0,
-) -> tuple[DataFrame, list[str]]:
-    """SparseVector view of the DFM for MLlib estimators (A1's vector form).
-    Returns (df + features col, vocabulary). Long form stays canonical;
-    this exists only at the MLlib boundary."""
-    cv = CountVectorizer(
-        inputCol=tokens_col, outputCol=features_col,
-        vocabSize=vocab_size, minDF=min_df,
-    )
-    model = cv.fit(tokenized)
-    return model.transform(tokenized), list(model.vocabulary)
 
 
 def vectorize_with_vocabulary(

@@ -1,21 +1,24 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` payloads
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-Extension surface (SURVEY.md section 2.10 north star). Decode comes in
-two flavors:
+Extension surface (SURVEY.md section 2.10 north star). Every modality
+decodes for real through bundled pure-NumPy codecs, no
+PIL/torchaudio/pyav needed: IMAGES via ``functions.imagecodec``
+(uncompressed 24-bit BMP + binary PPM), AUDIO via
+``functions.audiocodec`` (PCM WAV), VIDEO via ``functions.videocodec``
+(YUV4MPEG2). Compressed formats (JPEG/PNG/MP3/H.264/…) raise
+NotImplementedError at the first batch unless a decoder is plugged in
+with ``register_codec`` (bundled JPEG/PNG/GIF decoders ship for that
+seam).
 
-  * ``use_real_codec=True``  → ALL THREE modalities decode for real via
-    bundled pure-NumPy codecs: IMAGES (``functions.imagecodec``,
-    uncompressed 24-bit BMP + binary PPM), AUDIO
-    (``functions.audiocodec``, PCM WAV), VIDEO frame sampling
-    (``functions.videocodec``, YUV4MPEG2) — no PIL/torchaudio/pyav
-    needed. COMPRESSED formats (JPEG/PNG/MP3/H.264/…) still raise
-    NotImplementedError at the first batch (clearly marked; plug the
-    external codecs in on a real cluster);
-  * default                  → a deterministic fake decode that derives
-    pixel/audio statistics from the payload bytes (md5-seeded), so the
-    Spark-side plumbing — schema, partitioning, UDF signature, Arrow batch
-    shape, null handling — is real and TESTED even without codecs.
+Audio (``decode_audio``, ``audio_fingerprint``, ``audio_near_dups``),
+video (``sample_frames``, ``scene_changes``) and ``resize_images`` have
+only the real path. The image stats/hash operators (``decode_media``,
+``image_phash``, ``image_near_dups``) keep a second one: by default
+they derive the stats or the dHash tile from md5s of the payload
+bytes. That path is what the registry's ``media_decode_stats`` and
+``media_phash_near_dups`` run, because their DuckDB twins recompute the
+same md5 tile in SQL; ``use_real_codec=True`` decodes the pixels.
 
 Scale notes: payloads never pass through Python row-at-a-time; mapInPandas
 streams Arrow record batches, so executor memory is bounded by
@@ -33,7 +36,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -227,19 +229,16 @@ _AUDIO_SCHEMA = (
 )
 
 
-def decode_audio(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
+def decode_audio(media: DataFrame) -> DataFrame:
     """Audio decode step: payload → per-item waveform stats (sample rate,
     channel/sample counts, duration, RMS and peak amplitude normalized to
-    [-1, 1]). With ``use_real_codec`` the payload is ACTUALLY parsed by
-    the bundled pure-NumPy PCM WAV codec (``functions.audiocodec``);
-    non-WAV/compressed audio raises at the first batch (plug torchaudio
-    or libsndfile there on a real cluster). The default fake path derives
-    the same schema deterministically from the payload digest so the
-    plumbing is testable without codecs. Same scale shape as
-    ``decode_media``: Arrow batches in, scalar rows out, blobs never
-    shuffle."""
+    [-1, 1]). The payload is parsed by the bundled pure-NumPy PCM WAV
+    codec (``functions.audiocodec``); non-WAV/compressed audio raises at
+    the first batch (plug torchaudio or libsndfile there on a real
+    cluster). Same scale shape as ``decode_media``: Arrow batches in,
+    scalar rows out, blobs never shuffle."""
 
-    def _real(p: bytes) -> tuple[int, int, int, int, float, float]:
+    def decode(p: bytes) -> tuple[int, int, int, int, float, float]:
         from week5_datingnlp_big_data_spark.functions import audiocodec
 
         if not audiocodec.sniff_wav(p):
@@ -259,18 +258,7 @@ def decode_audio(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
         dur_ms = int(round(n_frames * 1000 / rate)) if rate else 0
         return rate, n_ch, n_frames, dur_ms, round(rms, 6), round(peak, 6)
 
-    def _fake(p: bytes) -> tuple[int, int, int, int, float, float]:
-        d = hashlib.md5(p).digest()
-        rate = (8000, 16000, 22050, 44100)[d[0] % 4]
-        n_ch = 1 + d[1] % 2
-        n_frames = 1000 + int.from_bytes(d[2:5], "big") % 100_000
-        rms = round((d[5] / 255.0) * 0.5, 6)
-        return rate, n_ch, n_frames, int(round(n_frames * 1000 / rate)), rms, round(
-            min(1.0, rms * 2), 6
-        )
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _real if use_real_codec else _fake
         for pdf in batches:
             stats = [decode(p if p is not None else b"") for p in pdf["payload"]]
             yield pd.DataFrame({
@@ -304,31 +292,15 @@ def extract_features(media: DataFrame, dim: int = IMAGE_FEATURE_DIM) -> DataFram
     return media.select("media_id", "payload").mapInPandas(op, _FEATURE_SCHEMA)
 
 
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, use_real_codec: bool = False
-) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame. With
-    ``use_real_codec`` the payload is ACTUALLY parsed by the bundled
-    YUV4MPEG2 codec (``functions.videocodec``): frame timestamps come
-    from the stream's own frame rate, and ``frame_sha`` hashes the REAL
-    decoded luma plane — compressed containers raise at the first batch
-    (plug pyav/ffmpeg there on a real cluster). The default fake path
-    explodes ``meta.duration_ms`` into synthetic frame rows so the
-    one-row-in/many-rows-out UDF shape stays testable without codecs.
-    Non-video rows produce no output either way."""
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+    """Video frame sampling: one output row per sampled frame. The
+    payload is parsed by the bundled YUV4MPEG2 codec
+    (``functions.videocodec``): frame timestamps come from the stream's
+    own frame rate, and ``frame_sha`` hashes the decoded luma plane.
+    Compressed containers raise at the first batch (plug pyav/ffmpeg
+    there on a real cluster). Non-video rows produce no output."""
 
-    def _fake_rows(mid, p: bytes, dur, out) -> None:
-        if dur is None:
-            return
-        for idx, ts in enumerate(range(0, int(dur), every_ms)):
-            out["media_id"].append(mid)
-            out["frame_idx"].append(idx)
-            out["frame_ts_ms"].append(ts)
-            out["frame_sha"].append(
-                hashlib.sha256(p + ts.to_bytes(8, "big")).hexdigest()
-            )
-
-    def _real_rows(mid, p: bytes, out) -> None:
+    def emit_frames(mid, p: bytes, out) -> None:
         from week5_datingnlp_big_data_spark.functions import videocodec
 
         if not videocodec.sniff_y4m(p):
@@ -353,37 +325,26 @@ def sample_frames(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"media_id": [], "frame_idx": [], "frame_ts_ms": [], "frame_sha": []}
-            for mid, kind, p, dur in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"], pdf["duration_ms"]
-            ):
-                if kind != "video":
-                    continue
-                p = p if p is not None else b""
-                if use_real_codec:
-                    _real_rows(mid, p, out)
-                else:
-                    _fake_rows(mid, p, dur, out)
+            for mid, kind, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
+                if kind == "video":
+                    emit_frames(mid, p if p is not None else b"", out)
             yield pd.DataFrame(out)
 
-    flat = media.select(
-        "media_id", "kind", "payload", F.col("meta.duration_ms").alias("duration_ms")
-    )
-    return flat.mapInPandas(op, _FRAME_SCHEMA)
+    return media.select("media_id", "kind", "payload").mapInPandas(op, _FRAME_SCHEMA)
 
 
-def resize_images(media: DataFrame, target_w: int, target_h: int,
-                  use_real_codec: bool = False) -> DataFrame:
-    """Resize: payload → payload' with updated meta. The real transform is
-    codec-gated; the fake path re-hashes the payload with the target dims
-    (deterministic distinct output) and rewrites meta — exercising the
-    binary-in/binary-out UDF shape end to end."""
+def resize_images(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
+    """Resize: payload → nearest-neighbour-resized BMP payload with the
+    target dims. Decodes with the bundled BMP/PPM codec; any other
+    payload (including non-image rows) raises at the first batch —
+    exercising the binary-in/binary-out UDF shape end to end."""
 
     out_schema = (
         "media_id long, kind string, payload binary, "
         "width int, height int"
     )
 
-    def _real_resize(kind: str, payload: bytes) -> bytes:
+    def resize(kind: str, payload: bytes) -> bytes:
         from week5_datingnlp_big_data_spark.functions import imagecodec
 
         if kind == "image" and imagecodec.sniff_format(payload):
@@ -398,23 +359,13 @@ def resize_images(media: DataFrame, target_w: int, target_h: int,
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_real_codec:
-                payloads = [
-                    _real_resize(k, p if p is not None else b"")
-                    for k, p in zip(pdf["kind"], pdf["payload"])
-                ]
-            else:
-                payloads = [
-                    hashlib.sha256(
-                        (p if p is not None else b"")
-                        + target_w.to_bytes(4, "big") + target_h.to_bytes(4, "big")
-                    ).digest()
-                    for p in pdf["payload"]
-                ]
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
                 "kind": pdf["kind"],
-                "payload": payloads,
+                "payload": [
+                    resize(k, p if p is not None else b"")
+                    for k, p in zip(pdf["kind"], pdf["payload"])
+                ],
                 "width": target_w,
                 "height": target_h,
             })
@@ -423,13 +374,14 @@ def resize_images(media: DataFrame, target_w: int, target_h: int,
 
 
 def make_fake_media(spark: SparkSession, n: int = 20, seed: int = 7) -> DataFrame:
-    """Deterministic fake media table for tests/demos: a third each of
-    image/audio/video. IMAGE payloads are real encoded rasters (BMP/PPM
-    alternating, random small dims) so the ``use_real_codec`` path decodes
-    them end to end; audio/video payloads stay opaque random bytes."""
-    from week5_datingnlp_big_data_spark.functions import imagecodec
-
-    from week5_datingnlp_big_data_spark.functions import audiocodec
+    """Deterministic synthetic media table for tests/demos: a third each
+    of image/audio/video, every payload a real encoded stream the bundled
+    codecs decode — images BMP/PPM alternating (random small dims, random
+    pixels), audio PCM WAV (seeded sine + noise), video mono YUV4MPEG2
+    (random frames)."""
+    from week5_datingnlp_big_data_spark.functions import (
+        audiocodec, imagecodec, videocodec,
+    )
 
     rng = np.random.default_rng(seed)
     rows = []
@@ -444,8 +396,6 @@ def make_fake_media(spark: SparkSession, n: int = 20, seed: int = 7) -> DataFram
             meta = {"mime": mime, "width": w, "height": h,
                     "sample_rate": None, "duration_ms": None}
         elif kind == "audio":
-            # Real PCM WAV payload (seeded sine + noise) so the
-            # use_real_codec path decodes audio end to end in-container.
             rate = (8000, 16000)[i % 2]
             n_frames = int(rng.integers(rate // 4, rate))  # 0.25-1.0 s
             t = np.arange(n_frames) / rate
@@ -456,10 +406,6 @@ def make_fake_media(spark: SparkSession, n: int = 20, seed: int = 7) -> DataFram
                     "sample_rate": rate,
                     "duration_ms": int(round(n_frames * 1000 / rate))}
         else:
-            # Real Cmono y4m payload (seeded gradient frames) so the
-            # use_real_codec frame sampler decodes video end to end.
-            from week5_datingnlp_big_data_spark.functions import videocodec
-
             vw, vh = int(rng.integers(8, 33)), int(rng.integers(8, 33))
             n_frames = int(rng.integers(3, 25))
             fps = (10, 1)
@@ -641,61 +587,44 @@ def _goertzel_symbols(samples: np.ndarray) -> list[int]:
     return out
 
 
-def _fake_audio_symbols(payload: bytes) -> list[int]:
-    """Deterministic pseudo-fingerprint for the plumbing path: block b's
-    symbol is byte b of the md5 chain md5(md5(payload)) ∥
-    md5(md5(md5(payload))) mod AFP_PROBES — same md5-chain discipline
-    as _fake_gray_tile, extended to 32 bytes so all AFP_BLOCKS symbols
-    are independent (no byte reuse across pigeonhole groups)."""
-    d1 = hashlib.md5(hashlib.md5(payload).digest()).digest()
-    d = d1 + hashlib.md5(d1).digest()
-    return [d[b] % AFP_PROBES for b in range(AFP_BLOCKS)]
-
-
-def audio_fingerprint(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
+def audio_fingerprint(media: DataFrame) -> DataFrame:
     """Per-clip spectral fingerprint ``(media_id, afp: array<int>)``:
     AFP_BLOCKS time blocks x the index (0..AFP_PROBES-1) of each
-    block's dominant probe frequency. With ``use_real_codec`` the
-    symbols come from actually decoded PCM (functions/audiocodec)
-    through the Goertzel probe bank — amplitude-invariant (argmax of
-    linearly scaled powers) and rate-invariant (probes are fractions
-    of the sample rate); the default fake path is md5-derived so the
-    plumbing stays testable without a codec. Arrow-batched
-    mapInPandas, blobs dropped on output — the audio-side analog of
-    image_phash. The symbol-array form (not a packed bit signature)
-    feeds dedup.symbol_near_dup_pairs' group-hash pigeonhole, whose
-    join-key entropy grows with the fingerprint width."""
+    block's dominant probe frequency. The symbols come from PCM decoded
+    by functions/audiocodec through the Goertzel probe bank —
+    amplitude-invariant (argmax of linearly scaled powers) and
+    rate-invariant (probes are fractions of the sample rate); non-WAV
+    payloads raise at the first batch. Arrow-batched mapInPandas, blobs
+    dropped on output — the audio-side analog of image_phash. The
+    symbol-array form (not a packed bit signature) feeds
+    dedup.symbol_near_dup_pairs' group-hash pigeonhole, whose join-key
+    entropy grows with the fingerprint width."""
     from week5_datingnlp_big_data_spark.functions import audiocodec
+
+    def symbols(k: str, p: bytes) -> list[int]:
+        if k != "audio" or not audiocodec.sniff_wav(p):
+            raise NotImplementedError(
+                "real audio fingerprint needs a PCM WAV payload "
+                "(compressed formats: plug a codec in via "
+                "register_codec on a real cluster)"
+            )
+        samples, _rate = audiocodec.decode_wav(p)
+        return _goertzel_symbols(samples)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            sigs = []
-            for k, p in zip(pdf["kind"], pdf["payload"]):
-                p = p if p is not None else b""
-                if use_real_codec:
-                    if k != "audio" or not audiocodec.sniff_wav(p):
-                        raise NotImplementedError(
-                            "real audio fingerprint needs a PCM WAV payload "
-                            "(compressed formats: plug a codec in via "
-                            "register_codec on a real cluster)"
-                        )
-                    samples, _rate = audiocodec.decode_wav(p)
-                    syms = _goertzel_symbols(samples)
-                else:
-                    syms = _fake_audio_symbols(p)
-                sigs.append(syms)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "afp": sigs}
-            )
+            sigs = [
+                symbols(k, p if p is not None else b"")
+                for k, p in zip(pdf["kind"], pdf["payload"])
+            ]
+            yield pd.DataFrame({"media_id": pdf["media_id"], "afp": sigs})
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         op, "media_id long, afp array<int>"
     )
 
 
-def audio_near_dups(
-    media: DataFrame, max_block_mismatch: int = 2, use_real_codec: bool = False
-) -> DataFrame:
+def audio_near_dups(media: DataFrame, max_block_mismatch: int = 2) -> DataFrame:
     """Audio near-dup pairs: spectral symbol-array fingerprints through
     the group-hash pigeonhole join (dedup.symbol_near_dup_pairs):
     max_block_mismatch+1 contiguous symbol groups, join key =
@@ -719,7 +648,7 @@ def audio_near_dups(
     from week5_datingnlp_big_data_spark.operators import dedup
 
     return dedup.symbol_near_dup_pairs(
-        audio_fingerprint(media, use_real_codec=use_real_codec),
+        audio_fingerprint(media),
         "afp",
         n_symbols=AFP_BLOCKS,
         id_col="media_id",
@@ -731,11 +660,7 @@ def audio_near_dups(
 # Video temporal segmentation: scene-change detection over luma frames
 # ---------------------------------------------------------------------------
 
-def scene_changes(
-    media: DataFrame,
-    threshold: float = 25.0,
-    use_real_codec: bool = False,
-) -> DataFrame:
+def scene_changes(media: DataFrame, threshold: float = 25.0) -> DataFrame:
     """Per-video temporal segmentation stats: decode the frame stream,
     compute the mean absolute luma difference between consecutive
     frames, and count cuts (diff > ``threshold`` of 255) — the
@@ -743,40 +668,26 @@ def scene_changes(
     scene-level sampling/dedup. Output one row per video:
     ``(media_id, n_frames, n_cuts, mean_diff, max_diff)``.
 
-    With ``use_real_codec`` frames come from the bundled YUV4MPEG2
-    decoder (functions/videocodec); the fake path derives a
-    deterministic per-frame gray level from the payload md5 chain so
-    the plumbing is testable without a codec. Arrow-batched
-    mapInPandas; payloads never leave the stage (only the 5 stat
-    columns ship), so executor memory is bounded by the Arrow batch
-    size x payload size, not the corpus."""
+    Frames come from the bundled YUV4MPEG2 decoder (functions/videocodec);
+    other payloads raise at the first batch. Arrow-batched mapInPandas;
+    payloads never leave the stage (only the 5 stat columns ship), so
+    executor memory is bounded by the Arrow batch size x payload size,
+    not the corpus."""
     from week5_datingnlp_big_data_spark.functions import videocodec
 
     def frame_diffs(k: str, p: bytes) -> tuple[int, np.ndarray]:
         """(n_frames, per-boundary mean-abs luma diffs)."""
-        if use_real_codec:
-            if k != "video" or not videocodec.sniff_y4m(p):
-                raise NotImplementedError(
-                    "real scene detection needs a YUV4MPEG2 payload "
-                    "(compressed formats: plug a codec in via "
-                    "register_codec on a real cluster)"
-                )
-            frames, _w, _h, _fps = videocodec.decode_y4m(p)
-            if len(frames) < 2:
-                return len(frames), np.empty(0)
-            stack = np.stack([f.astype(np.float64) for f in frames])
-            return len(frames), np.abs(stack[1:] - stack[:-1]).mean(axis=(1, 2))
-        # fake path: deterministic per-frame gray level from the payload
-        # md5 chain (same discipline as _fake_gray_tile)
-        base = hashlib.md5(p).hexdigest()
-        n = 4 + hashlib.md5(p).digest()[0] % 12
-        means = np.array(
-            [
-                float(hashlib.md5(f"{base}:{i}".encode()).digest()[0])
-                for i in range(n)
-            ]
-        )
-        return n, np.abs(means[1:] - means[:-1])
+        if k != "video" or not videocodec.sniff_y4m(p):
+            raise NotImplementedError(
+                "real scene detection needs a YUV4MPEG2 payload "
+                "(compressed formats: plug a codec in via "
+                "register_codec on a real cluster)"
+            )
+        frames, _w, _h, _fps = videocodec.decode_y4m(p)
+        if len(frames) < 2:
+            return len(frames), np.empty(0)
+        stack = np.stack([f.astype(np.float64) for f in frames])
+        return len(frames), np.abs(stack[1:] - stack[:-1]).mean(axis=(1, 2))
 
     def diffs(k: str, p: bytes) -> tuple[int, int, float, float]:
         n, d = frame_diffs(k, p)

@@ -661,21 +661,6 @@ def basket_copurchase(
     )
 
 
-def top_k_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list[Column],
-    k: int,
-) -> DataFrame:
-    """Dense idiom for per-group top-k (row_number ≤ k). Single shuffle;
-    at scale prefer this over per-group sorts or collect_list."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_by)
-    return (
-        df.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
-
-
 def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,

@@ -179,16 +179,6 @@ def countmin_from_tokens(tokens: DataFrame, depth: int = 4, width: int = 256) ->
     )
 
 
-def token_countmin_sketch(
-    docs: DataFrame,
-    text_col: str = "text",
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Corpus token-frequency Count-Min sketch; see countmin_from_tokens."""
-    return countmin_from_tokens(tokenize_whitespace(docs, text_col), depth, width)
-
-
 def cms_estimate_from_sketch(
     sketch: DataFrame,
     probe_tokens: DataFrame,

@@ -225,22 +225,6 @@ def _doc_term_counts_ws(docs: DataFrame, text_col: str, id_col: str) -> DataFram
     )
 
 
-def unigram_lm(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Corpus unigram language model: (term, logprob) with
-    logprob = log10(count(term) / total_tokens) over whitespace-lowered
-    tokens. One explode + one groupBy — partial aggregation absorbs the
-    Zipf head map-side, and the total is a scalar broadcast."""
-    counts = (
-        _doc_term_counts_ws(docs, text_col, id_col)
-        .groupBy("term")
-        .agg(F.sum("c").alias("cnt"))
-    )
-    total = counts.agg(F.sum("cnt").alias("total"))
-    return counts.crossJoin(F.broadcast(total)).select(
-        "term", F.log10(F.col("cnt") / F.col("total")).alias("logprob")
-    )
-
-
 def unigram_logprob_scores(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -44,23 +44,18 @@ def prepare_corpus(
     near_dup_threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    single_pass_metrics: bool = True,
 ) -> DataPipeResult:
     """Run the full preparation cascade.
 
-    ``single_pass_metrics=True`` (default) collects the per-stage funnel
-    with the ``Observation`` API: the row counts ride along the one final
-    materialization instead of costing one action per stage — at 100 TB
-    the difference between reading the corpus once and reading it four
-    times. ``False`` falls back to explicit per-stage counts (useful when
-    a stage must be debugged in isolation)."""
+    The per-stage funnel is collected with the ``Observation`` API: the
+    row counts ride along the one final materialization instead of
+    costing one action per stage — at 100 TB the difference between
+    reading the corpus once and reading it four times."""
     from pyspark.sql import Observation
 
     obs: dict[str, Observation] = {}
 
     def observe(df: DataFrame, name: str) -> DataFrame:
-        if not single_pass_metrics:
-            return df
         obs[name] = Observation(name)
         return df.observe(obs[name], F.count(F.lit(1)).alias("n"))
 
@@ -89,17 +84,6 @@ def prepare_corpus(
     clean = exact.join(drop_ids, id_col, "left_anti").cache()
     n_near = clean.count()   # the single materializing action
 
-    if single_pass_metrics:
-        n_input = obs["input"].get["n"]
-        n_lang = obs["lang"].get["n"]
-        n_quality = obs["quality"].get["n"]
-        n_exact = obs["exact"].get["n"]
-    else:
-        n_input = docs.count()
-        n_lang = step.count()
-        n_quality = good.count()
-        n_exact = exact.count()
-
     # 5. token counts + corpus stats
     clean = clean.withColumn("n_tokens", textstats.token_count_ws(text_col))
     stats = clean.agg(
@@ -111,10 +95,10 @@ def prepare_corpus(
     return DataPipeResult(
         clean=clean,
         stats=stats,
-        n_input=n_input,
-        n_after_lang=n_lang,
-        n_after_quality=n_quality,
-        n_after_exact=n_exact,
+        n_input=obs["input"].get["n"],
+        n_after_lang=obs["lang"].get["n"],
+        n_after_quality=obs["quality"].get["n"],
+        n_after_exact=obs["exact"].get["n"],
         n_after_near=n_near,
     )
 

@@ -2,8 +2,9 @@
 points (SURVEY.md section 3), as one lazy DataFrame DAG each.
 
 EP-1 supervised classification (Week5_datingNLP.R:45–188)
-EP-2 TF-IDF weighting          (R:234–247)
-EP-3 frequency analysis + unsupervised (R:258–326)
+EP-2 TF-IDF weighting          (R:234–247): ``tfidf.tf_idf(EP1Result.counts)``
+EP-3 frequency analysis       (R:258–280); its k-means sweep (R:301–326)
+     is ``ml.kmeans_restarts``
 
 The reference materializes eagerly at every step (33 GB peak); here each
 pipeline is declared lazily and only the terminal artifacts materialize.
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from week5_datingnlp_big_data_spark.functions import stemmer
-from week5_datingnlp_big_data_spark.operators import corpus, dfm, freq, ml, tfidf
+from week5_datingnlp_big_data_spark.operators import corpus, dfm, freq, ml
 
 
 @dataclass
@@ -74,9 +75,9 @@ def ep1_classification(
     # JVM regex work. Stemming happens below on DISTINCT terms only — the
     # Zipf-aware formulation (dfm.stem_counts' trick, applied to the full
     # pipeline): the Python stemmer touches |vocab| rows (~10^5), never
-    # every token occurrence (~10^7+). min_token_len=1 defers the length
-    # filter: the reference applies it AFTER stemming (R:86-87).
-    raw = corpus.tokenize_corpus(docs, stem=False, min_token_len=1).cache()
+    # every token occurrence (~10^7+). The length filter comes after
+    # stemming, as in the reference (R:86-87).
+    raw = corpus.tokenize_corpus(docs).cache()
     # Materialization barrier: several downstream shuffle-map stages read
     # this cache concurrently — cold, each would re-run the tokenizer
     # (measured ~3x the corpus scan at 60k docs).
@@ -187,48 +188,26 @@ def ep1_classification(
     )
 
 
-def ep2_tfidf(tokenized: DataFrame, *, min_docfreq: int = 2, min_termfreq: int = 3) -> DataFrame:
-    """EP-2: trimmed long-form DFM → reference-semantics TF-IDF
-    (tf=count/doc_total, idf=log10(N/df))."""
-    counts = dfm.trim_vocabulary(
-        dfm.doc_term_counts(tokenized), min_docfreq, min_termfreq
-    )
-    return tfidf.tf_idf(counts)
-
-
 @dataclass
 class EP3Result:
     male_top: DataFrame
     female_top: DataFrame
     distinctive_male: DataFrame
     distinctive_female: DataFrame
-    kmeans_costs: dict[int, float]
 
 
 def ep3_word_analysis(
-    profiles: DataFrame,
-    vectorized: DataFrame | None = None,
-    *,
-    top_k: int = 25,
-    distinct_k: int = 500,
-    kmeans_ks: tuple[int, ...] = (),
-    seed: int = 42,
+    profiles: DataFrame, *, top_k: int = 25, distinct_k: int = 500
 ) -> EP3Result:
-    """EP-3: per-sex frequency rankings (raw-split semantics, R:258–270),
-    distinctive-word setdiffs (R:278–280), optional k-means sweep
-    (R:301–313) when a vectorized frame is supplied. All four rankings
-    read one persisted per-sex word count."""
+    """EP-3: per-sex frequency rankings (raw-split semantics, R:258–270)
+    and distinctive-word setdiffs (R:278–280). All four rankings read
+    one persisted per-sex word count. The reference's k-means sweep
+    (R:301–313) is ``ml.kmeans_restarts`` over EP-1's feature vectors."""
     docs = corpus.profiles_to_docs(profiles)
     counts = freq.grouped_word_counts(docs, "sex").persist()
-    costs: dict[int, float] = {}
-    if vectorized is not None and kmeans_ks:
-        vectorized = vectorized.cache()
-        for k in kmeans_ks:
-            _, costs[k] = ml.kmeans_restarts(vectorized, k, seed=seed)
     return EP3Result(
         male_top=freq.group_top_k(counts, "sex", "m", top_k),
         female_top=freq.group_top_k(counts, "sex", "f", top_k),
         distinctive_male=freq.distinctive_words(counts, "sex", "m", "f", distinct_k),
         distinctive_female=freq.distinctive_words(counts, "sex", "f", "m", distinct_k),
-        kmeans_costs=costs,
     )

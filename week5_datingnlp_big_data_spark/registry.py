@@ -179,7 +179,7 @@ def wordcount_salted_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
 def raw_split_top25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-exact A5 (R:258–262): split on single space keeping empty
     tokens, count, top-25."""
-    return freq.top_k_words(_t(spark, sf_dir, "documents"), 25, "text", raw=True)
+    return freq.top_k_words(_t(spark, sf_dir, "documents"), 25, "text")
 
 
 @query(
@@ -2118,37 +2118,56 @@ def media_phash_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_media(spark: SparkSession, sf_dir: str, kind: str, payload,
+               *, text: bool = True) -> DataFrame:
+    """One synthetic media row per document, ``(media_id, kind,
+    payload)`` with ``media_id = doc_id`` and ``payload =
+    payload(doc_id, text)`` (``text`` NULL → ``""``), encoded in one
+    Arrow-batched mapInPandas over the spread documents. ``text=False``
+    projects ``doc_id`` alone and passes ``text=None``. The ``payload``
+    closure ships to the Python workers by value, but a module-level
+    function it calls ships by reference: keep those in light modules
+    (``functions/*``), not here, or every worker imports this module."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            texts = pdf["text"].fillna("") if text else [None] * len(pdf)
+            yield pd.DataFrame({
+                "media_id": pdf["doc_id"],
+                "kind": kind,
+                "payload": [
+                    payload(int(did), t) for did, t in zip(pdf["doc_id"], texts)
+                ],
+            })
+
+    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = docs.select("doc_id", "text") if text else docs.select("doc_id")
+    return docs.mapInPandas(encode, "media_id long, kind string, payload binary")
+
+
 @query("media_audio_stats")
 def media_audio_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio codec through the driver contract: each document's
     UTF-8 bytes become 8-bit PCM samples, encode to canonical WAV in one
-    Arrow-batched pass (functions/audiocodec.encode_wav), then the real
-    decode path (decode_audio(use_real_codec=True)) parses the RIFF
-    container back and reports waveform stats. Fully deterministic;
-    rows-only because DuckDB has no WAV parser to twin the container
-    round-trip (the codec itself is pinned bit-exact by
+    Arrow-batched pass (functions/audiocodec.encode_wav), then
+    decode_audio parses the RIFF container back and reports waveform
+    stats. Fully deterministic; rows-only because DuckDB has no WAV
+    parser to twin the container round-trip (the output is pinned by
+    tests/test_media_pins.py, the codec bit-exact by the
     tests/test_multimodal.py round-trips)."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from week5_datingnlp_big_data_spark.functions import audiocodec
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                audiocodec.encode_wav(
-                    np.frombuffer(t.encode("utf-8"), dtype=np.uint8), 8000
-                )
-                for t in pdf["text"].fillna("")
-            ]
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(_did: int, text: str) -> bytes:
+        samples = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        return audiocodec.encode_wav(samples, 8000)
 
-    docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
-    return mm.decode_audio(media, use_real_codec=True)
+    return mm.decode_audio(_doc_media(spark, sf_dir, "audio", payload))
 
 
 @query(
@@ -7320,10 +7339,8 @@ def media_audio_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal_r5.py. See
     operators/multimodal.py:audio_fingerprint / audio_near_dups."""
     import hashlib
-    from collections.abc import Iterator
 
     import numpy as np
-    import pandas as pd
 
     from week5_datingnlp_big_data_spark.functions import audiocodec
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
@@ -7331,39 +7348,22 @@ def media_audio_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fracs = mm.AFP_PROBE_FRACS
     n_blocks = mm.AFP_BLOCKS
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g = did // 5
-                syms = [
-                    hashlib.md5(f"afp:{g}:{b}".encode()).digest()[0] % len(fracs)
-                    for b in range(n_blocks)
-                ]
-                if did % 5 == 4:
-                    syms[0] = (syms[0] + 1) % len(fracs)
-                t = np.arange(100)
-                phase = (did % 97) / 97.0 * 2.0 * np.pi
-                wave = np.concatenate(
-                    [0.5 * np.sin(2 * np.pi * fracs[s] * t + phase) for s in syms]
-                )
-                payloads.append(
-                    audiocodec.encode_wav(
-                        (wave * 32767).astype(np.int16), 8000
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "audio",
-                    "payload": payloads,
-                }
-            )
+    def payload(did: int, _text: None) -> bytes:
+        syms = [
+            hashlib.md5(f"afp:{did // 5}:{b}".encode()).digest()[0] % len(fracs)
+            for b in range(n_blocks)
+        ]
+        if did % 5 == 4:
+            syms[0] = (syms[0] + 1) % len(fracs)
+        t = np.arange(100)
+        phase = (did % 97) / 97.0 * 2.0 * np.pi
+        wave = np.concatenate(
+            [0.5 * np.sin(2 * np.pi * fracs[s] * t + phase) for s in syms]
+        )
+        return audiocodec.encode_wav((wave * 32767).astype(np.int16), 8000)
 
-    docs = spread(_t(spark, sf_dir, "documents")).select("doc_id")
-    media = docs.mapInPandas(encode, "media_id long, kind string, payload binary")
-    return mm.audio_near_dups(media, max_block_mismatch=2, use_real_codec=True)
+    media = _doc_media(spark, sf_dir, "audio", payload, text=False)
+    return mm.audio_near_dups(media, max_block_mismatch=2)
 
 
 @query("media_scene_change_stats")
@@ -7377,39 +7377,22 @@ def media_scene_change_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction — pinned by units. Rows-only (no y4m parser in
     DuckDB). See operators/multimodal.py:scene_changes."""
     import hashlib
-    from collections.abc import Iterator
 
     import numpy as np
-    import pandas as pd
 
     from week5_datingnlp_big_data_spark.functions import videocodec
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n_scenes = 2 + did % 3
-                frames = []
-                for s in range(n_scenes):
-                    jitter = hashlib.md5(f"sc:{did}:{s}".encode()).digest()[0] % 20
-                    gray = 30 + 160 * (s % 2) + jitter
-                    frames.extend([np.full((8, 8), gray, dtype=np.uint8)] * 3)
-                payloads.append(
-                    videocodec.encode_y4m_mono(np.stack(frames), fps=(10, 1))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "video",
-                    "payload": payloads,
-                }
-            )
+    def payload(did: int, _text: None) -> bytes:
+        frames = []
+        for s in range(2 + did % 3):
+            jitter = hashlib.md5(f"sc:{did}:{s}".encode()).digest()[0] % 20
+            gray = 30 + 160 * (s % 2) + jitter
+            frames.extend([np.full((8, 8), gray, dtype=np.uint8)] * 3)
+        return videocodec.encode_y4m_mono(np.stack(frames), fps=(10, 1))
 
-    docs = spread(_t(spark, sf_dir, "documents")).select("doc_id")
-    media = docs.mapInPandas(encode, "media_id long, kind string, payload binary")
-    return mm.scene_changes(media, threshold=25.0, use_real_codec=True)
+    media = _doc_media(spark, sf_dir, "video", payload, text=False)
+    return mm.scene_changes(media, threshold=25.0)
 
 
 @query(
@@ -7789,43 +7772,24 @@ def media_jpeg_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin in SQL); the codec itself is pinned by round-trip units in
     tests/test_jpegcodec.py. See functions/jpegcodec.py and
     operators/multimodal.py:register_bundled_jpeg_codec."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from week5_datingnlp_big_data_spark.functions import jpegcodec
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["text"].fillna("")):
-                raw = text.encode("utf-8") or b"\x80"
-                w = 16 + int(did) % 17
-                h = max(1, min(len(raw) // w, 48))
-                tile = np.frombuffer(
-                    raw[: w * h].ljust(w * h, b"\x20"), dtype=np.uint8
-                ).reshape(h, w)
-                payloads.append(
-                    jpegcodec.encode_jpeg_gray(
-                        tile, quality=90, restart_interval=4
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "payload": payloads,
-                }
-            )
+    def payload(did: int, text: str) -> bytes:
+        # gray tile padded with spaces, not repeated
+        raw = text.encode("utf-8") or b"\x80"
+        w = 16 + did % 17
+        h = max(1, min(len(raw) // w, 48))
+        tile = np.frombuffer(
+            raw[: w * h].ljust(w * h, b"\x20"), dtype=np.uint8
+        ).reshape(h, w)
+        return jpegcodec.encode_jpeg_gray(tile, quality=90, restart_interval=4)
 
     mm.register_bundled_jpeg_codec()
     try:
-        docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-        media = docs.mapInPandas(
-            encode, "media_id long, kind string, payload binary"
-        )
+        media = _doc_media(spark, sf_dir, "image", payload)
         return mm.decode_media(media, use_real_codec=True)
     finally:
         mm.unregister_codec("jpeg")
@@ -7885,47 +7849,19 @@ def media_png_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible) stay pinned by the lossless round-trip units in
     tests/test_pngcodec.py. See functions/pngcodec.py and
     operators/multimodal.py:register_bundled_png_codec."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from week5_datingnlp_big_data_spark.functions import pngcodec
+    from week5_datingnlp_big_data_spark.functions import imagecodec, pngcodec
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["text"].fillna("")):
-                did = int(did)
-                raw = text.encode("utf-8") or b"\x80"
-                ch = (1, 3, 4)[did % 3]
-                w = 12 + did % 13
-                h = max(1, min(len(raw) // w, 32))
-                need = w * h * ch
-                buf = (raw * (need // max(len(raw), 1) + 1))[:need]
-                tile = np.frombuffer(buf, dtype=np.uint8).reshape(
-                    (h, w) if ch == 1 else (h, w, ch)
-                )
-                payloads.append(
-                    pngcodec.encode_png(
-                        tile, filter_type=did % 5, interlace=did % 2 == 1
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "payload": payloads,
-                }
-            )
+    def payload(did: int, text: str) -> bytes:
+        raw = text.encode("utf-8") or b"\x80"
+        tile = imagecodec.repeat_tile(raw, 12 + did % 13, 32, (1, 3, 4)[did % 3])
+        return pngcodec.encode_png(
+            tile, filter_type=did % 5, interlace=did % 2 == 1
+        )
 
     mm.register_bundled_png_codec()
     try:
-        docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-        media = docs.mapInPandas(
-            encode, "media_id long, kind string, payload binary"
-        )
+        media = _doc_media(spark, sf_dir, "image", payload)
         return mm.decode_media(media, use_real_codec=True).select(
             "media_id", "kind", "width", "height", "mean_byte"
         )
@@ -7945,43 +7881,21 @@ def media_gif_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip / width-growth / dictionary-reset / KwKwK / interlace
     units in tests/test_gifcodec.py. See functions/gifcodec.py and
     operators/multimodal.py:register_bundled_gif_codec."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from week5_datingnlp_big_data_spark.functions import gifcodec
+    from week5_datingnlp_big_data_spark.functions import gifcodec, imagecodec
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
 
     palette = (np.arange(64 * 3, dtype=np.uint8).reshape(64, 3) * 4 + 1)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["text"].fillna("")):
-                did = int(did)
-                raw = text.encode("utf-8") or b"\x80"
-                w = 10 + did % 11
-                h = max(1, min(len(raw) // w, 24))
-                buf = (raw * (w * h // max(len(raw), 1) + 1))[: w * h]
-                idx = np.frombuffer(buf, dtype=np.uint8).reshape(h, w) % 64
-                payloads.append(
-                    gifcodec.encode_gif(palette[idx], interlace=bool(did % 2))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "payload": payloads,
-                }
-            )
+    def payload(did: int, text: str) -> bytes:
+        raw = text.encode("utf-8") or b"\x80"
+        idx = imagecodec.repeat_tile(raw, 10 + did % 11, 24) % 64
+        return gifcodec.encode_gif(palette[idx], interlace=bool(did % 2))
 
     mm.register_bundled_gif_codec()
     try:
-        docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-        media = docs.mapInPandas(
-            encode, "media_id long, kind string, payload binary"
-        )
+        media = _doc_media(spark, sf_dir, "image", payload)
         return mm.decode_media(media, use_real_codec=True)
     finally:
         mm.unregister_codec("gif")
@@ -8000,47 +7914,21 @@ def media_jpeg_color_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (no JPEG bitstream twin in SQL); the codec is pinned by
     color round-trip units in tests/test_jpegcodec.py. See
     functions/jpegcodec.py:encode_jpeg_color / decode_jpeg."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from week5_datingnlp_big_data_spark.functions import jpegcodec
+    from week5_datingnlp_big_data_spark.functions import imagecodec, jpegcodec
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
 
     subs = ("4:4:4", "4:2:2", "4:2:0")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["text"].fillna("")):
-                did = int(did)
-                raw = text.encode("utf-8") or b"\x80"
-                w = 16 + did % 9
-                h = max(1, min(len(raw) // w, 32))
-                need = w * h * 3
-                buf = (raw * (need // max(len(raw), 1) + 1))[:need]
-                tile = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, 3)
-                payloads.append(
-                    jpegcodec.encode_jpeg_color(
-                        tile, quality=90, subsampling=subs[did % 3],
-                        restart_interval=3,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "payload": payloads,
-                }
-            )
+    def payload(did: int, text: str) -> bytes:
+        raw = text.encode("utf-8") or b"\x80"
+        tile = imagecodec.repeat_tile(raw, 16 + did % 9, 32, 3)
+        return jpegcodec.encode_jpeg_color(
+            tile, quality=90, subsampling=subs[did % 3], restart_interval=3,
+        )
 
     mm.register_bundled_jpeg_codec()
     try:
-        docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-        media = docs.mapInPandas(
-            encode, "media_id long, kind string, payload binary"
-        )
+        media = _doc_media(spark, sf_dir, "image", payload)
         return mm.decode_media(media, use_real_codec=True)
     finally:
         mm.unregister_codec("jpeg")
@@ -8057,50 +7945,22 @@ def media_jpeg_progressive_stats_q(spark: SparkSession, sf_dir: str) -> DataFram
     codec is pinned by baseline-equality and hand-derived scan-bitstream
     goldens in tests/test_jpegprogressive.py. See
     functions/jpegprogressive.py."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from week5_datingnlp_big_data_spark.functions import jpegprogressive
+    from week5_datingnlp_big_data_spark.functions import imagecodec, jpegprogressive
     from week5_datingnlp_big_data_spark.operators import multimodal as mm
 
     subs = ("4:4:4", "4:2:2", "4:2:0")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["text"].fillna("")):
-                did = int(did)
-                raw = text.encode("utf-8") or b"\x80"
-                w = 16 + did % 9
-                gray = did % 2 == 0
-                depth = 1 if gray else 3
-                h = max(1, min(len(raw) // w, 24))
-                need = w * h * depth
-                buf = (raw * (need // max(len(raw), 1) + 1))[:need]
-                tile = np.frombuffer(buf, dtype=np.uint8)
-                tile = tile.reshape(h, w) if gray else tile.reshape(h, w, 3)
-                payloads.append(
-                    jpegprogressive.encode_jpeg_progressive(
-                        tile, quality=90, subsampling=subs[did % 3],
-                        spectral_only=did % 5 == 0, restart_interval=2,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "payload": payloads,
-                }
-            )
+    def payload(did: int, text: str) -> bytes:
+        raw = text.encode("utf-8") or b"\x80"
+        tile = imagecodec.repeat_tile(raw, 16 + did % 9, 24, 1 if did % 2 == 0 else 3)
+        return jpegprogressive.encode_jpeg_progressive(
+            tile, quality=90, subsampling=subs[did % 3],
+            spectral_only=did % 5 == 0, restart_interval=2,
+        )
 
     mm.register_bundled_jpeg_codec()
     try:
-        docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-        media = docs.mapInPandas(
-            encode, "media_id long, kind string, payload binary"
-        )
+        media = _doc_media(spark, sf_dir, "image", payload)
         return mm.decode_media(media, use_real_codec=True)
     finally:
         mm.unregister_codec("jpeg")
