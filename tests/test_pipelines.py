@@ -41,18 +41,20 @@ def test_ep1_split_is_stratified_and_disjoint(ep1):
             assert abs(p - full[lab]) < 0.06, (lab, p, full[lab])
 
 
-def test_stratified_split_equals_sample_by(spark):
-    # The split's train side is filter(rand(seed) < f); with one fraction
-    # for every label that keeps exactly sampleBy's rows.
+def test_stratified_split_ignores_partition_layout(spark):
+    # The train side is a function of (seed, doc_id) only: the same rows
+    # in 1, 7 or 32 partitions give the same train ids.
     df = spark.createDataFrame(
         [(i, ("m", "f", "x")[i % 3]) for i in range(400)],
         "doc_id long, label string",
     ).cache()
-    train, test = ml.stratified_split(df, "doc_id", 0.7, 32984)
-    by = df.stat.sampleBy("label", {"m": 0.7, "f": 0.7, "x": 0.7}, 32984)
     ids = lambda d: sorted(r[0] for r in d.select("doc_id").collect())  # noqa: E731
-    assert ids(train) == ids(by)
-    assert sorted(ids(train) + ids(test)) == list(range(400))
+    splits = [ml.stratified_split(df.repartition(n), "doc_id", 0.7, 32984) for n in (1, 7, 32)]
+    trains = [ids(train) for train, _ in splits]
+    assert trains[0] == trains[1] == trains[2]
+    assert 0.6 < len(trains[0]) / 400 < 0.8
+    for train, test in splits:
+        assert sorted(ids(train) + ids(test)) == list(range(400))
     df.unpersist()
 
 

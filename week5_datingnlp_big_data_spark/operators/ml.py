@@ -72,15 +72,22 @@ def stratified_split(
     than exact partitioning, so row counts vary ~±1 %; class *proportions*
     are the verified invariant.
 
-    The train side is ``filter(rand(seed) < train_fraction)``, which keeps
-    exactly the rows of ``df.stat.sampleBy(label, {l: train_fraction for
-    every label l}, seed)``: Spark's ``sampleBy`` is a filter on
-    ``rand(seed) < fractions[label]``, so with one fraction for every
-    class the label drops out — no label-collecting job, and NULL-label
-    rows are sampled like any other (``sampleBy`` rejects a NULL key).
+    A row is in train iff ``u(seed, id) < train_fraction``, where ``u`` is
+    the first 13 hex digits of ``md5(seed:id)`` read as a fraction of
+    ``16^13`` — uniform on [0, 1) and a pure function of the id and the
+    seed (the bucket idiom of ``dedup.leakage_safe_split``). Unlike
+    ``rand(seed)``, whose draws follow the partition layout, the same seed
+    gives the same train ids at any core count or partitioning. One rate
+    for every class, so the label never enters the rule: no
+    label-collecting job, and NULL-label rows are sampled like any other.
     Test side = anti-join on the id, so the two sides are disjoint and
     exhaustive regardless of sampling, even if a partition is recomputed."""
-    train = df.filter(F.rand(seed) < train_fraction)
+    u = F.conv(
+        F.substring(F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string"))), 1, 13),
+        16,
+        10,
+    ).cast("double") / float(16**13)
+    train = df.filter(u < train_fraction)
     test = df.join(train.select(id_col), id_col, "left_anti")
     return train, test
 
