@@ -4,7 +4,8 @@ stopword-remove → STEM → trimmed DFM (25/35, the reference's thresholds) →
 CountVectorizer → stratified split → decision tree → confusion matrix) on
 a 59,946-row synthetic profiles corpus — the reference's exact corpus size,
 where it needs ~30 min of training time and 33 GB of RAM
-(BASELINE.md). Prints one JSON line with per-stage wall-clock.
+(BASELINE.md). Prints one JSON line with per-stage wall-clock, the
+local core count and the shuffle partition count.
 
 Usage: python scripts/scale_stress.py [n_rows]
 """
@@ -152,6 +153,8 @@ def main() -> None:
         )
     print(json.dumps({
         "n_docs": n_rows,
+        "cores": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
         "vocab_after_trim": n_vocab,
         "accuracy": round(r.accuracy, 4),
         "confusion": {f"{k[0]}/{k[1]}": v for k, v in confusion.items()},

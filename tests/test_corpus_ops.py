@@ -8,14 +8,6 @@ from pyspark.sql import functions as F
 from week5_datingnlp_big_data_spark.operators import corpus, dfm, freq, tfidf
 
 
-def test_select_essays_projects_prefix(spark):
-    from tests.fixtures import make_profiles
-
-    p = make_profiles(spark, n_rows=5)
-    out = corpus.select_essays(p)
-    assert out.columns == ["doc_id"] + [f"essay{i}" for i in range(10)]
-
-
 def test_concat_essays_null_becomes_empty_with_double_space(spark):
     # Reference fidelity (R:51 + read.csv semantics): a NULL/empty essay
     # contributes an empty string, so its separator slots remain →

@@ -17,9 +17,17 @@ from week5_datingnlp_big_data_spark.plans import pipelines
 from tests.fixtures import make_profiles
 
 
+# One planted profile whose only word the trim drops: its doc has no
+# trimmed-DFM row.
+NO_TERM_DOC = 10_000
+
+
 @pytest.fixture(scope="module")
 def profiles(spark):
-    return make_profiles(spark).cache()
+    base = make_profiles(spark)
+    essays = {f"essay{i}": "" for i in range(10)} | {"essay0": "quixotry"}
+    lone = base.first().asDict() | {"doc_id": NO_TERM_DOC} | essays
+    return base.unionByName(spark.createDataFrame([lone], base.schema)).cache()
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +37,7 @@ def ep1(profiles):
 
 def test_ep1_split_is_stratified_and_disjoint(ep1):
     train_n, test_n = ep1.train.count(), ep1.test.count()
-    assert train_n + test_n == 500
+    assert train_n + test_n == 501
     # Disjoint on doc_id
     assert ep1.train.join(ep1.test, "doc_id", "inner").count() == 0
     # Class proportions within ±6 % of the full corpus on both sides
@@ -70,6 +78,23 @@ def test_stratified_split_samples_null_labels(spark):
     te = {r[0] for r in test.select("doc_id").collect()}
     assert not tr & te and tr | te == set(range(50))
     df.unpersist()
+
+
+def test_ep1_features_equal_trimmed_dfm(ep1):
+    # Each doc's nonzero (term, count) pairs are exactly its trimmed-DFM
+    # rows; a doc with no row keeps an all-zero vector and its split slot.
+    dfm_rows: dict[int, dict[str, int]] = {}
+    for r in ep1.counts.collect():
+        dfm_rows.setdefault(r["doc_id"], {})[r["term"]] = r["count"]
+    docs = ep1.train.unionByName(ep1.test).collect()
+    assert len(docs) == 501
+    for r in docs:
+        v = r["features"]
+        assert v.size == len(ep1.vocabulary)
+        got = {ep1.vocabulary[i]: c for i, c in zip(v.indices, v.values)}
+        assert got == dfm_rows.get(r["doc_id"], {}), r["doc_id"]
+    assert NO_TERM_DOC not in dfm_rows
+    assert NO_TERM_DOC in {r["doc_id"] for r in docs}
 
 
 def test_ep1_vocabulary_matches_spark_ordering(spark):

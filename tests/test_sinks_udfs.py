@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from week5_datingnlp_big_data_spark.functions.text import make_names, sanitize_columns
 from week5_datingnlp_big_data_spark.functions.udfs import register_udfs
-from week5_datingnlp_big_data_spark.operators import corpus, ml
+from week5_datingnlp_big_data_spark.operators import ml
 from week5_datingnlp_big_data_spark.sources import sinks
 from week5_datingnlp_big_data_spark.sources.catalog import load_table, read_profiles_csv, table_stats
 
@@ -68,12 +68,6 @@ def test_sanitize_columns(spark):
     df = spark.createDataFrame([(1, 2)], ["my col", "2nd"])
     out = sanitize_columns(df)
     assert out.columns == ["my.col", "X2nd"]
-
-
-def test_drop_columns_by_name_and_position(spark):
-    df = spark.createDataFrame([(1, 2, 3)], ["a", "b", "c"])
-    assert corpus.drop_columns(df, "b").columns == ["a", "c"]
-    assert corpus.drop_columns_by_position(df, 0, 1).columns == ["c"]
 
 
 def test_cross_validate_tree(spark):

@@ -25,12 +25,6 @@ from week5_datingnlp_big_data_spark.functions.text import (
 from week5_datingnlp_big_data_spark.sources.schemas import ESSAY_COLS
 
 
-def select_essays(profiles: DataFrame) -> DataFrame:
-    """P1 — prefix projection of the 10 essay columns (R:50), keyed by
-    doc_id (the reference relies on row order; we carry an explicit key)."""
-    return profiles.select("doc_id", *[c for c in profiles.columns if c.startswith("essay")])
-
-
 def concat_essays(*cols: str) -> Column:
     """P2 — concatenate essay columns with a single space (R:51).
 
@@ -84,20 +78,10 @@ def explode_tokens(
     )
 
 
-def drop_columns(df: DataFrame, *names: str) -> DataFrame:
-    """P4 — drop by name (reference ``subset(select=-c(doc_id))``, R:145)."""
-    return df.drop(*names)
-
-
-def drop_columns_by_position(df: DataFrame, *positions: int) -> DataFrame:
-    """P5 — drop by position (reference ``df[,-c(1,2)]``, R:295). Spark
-    columns are name-addressed; positions resolve against ``df.columns``."""
-    names = [df.columns[p] for p in positions]
-    return df.drop(*names)
-
-
 def profiles_to_docs(profiles: DataFrame) -> DataFrame:
-    """EP-1 steps R:50–51: profiles → (doc_id, sex, text) document corpus."""
+    """EP-1 steps R:50–51 (P1 essay projection + P2 row concat): profiles
+    → (doc_id, sex, text) document corpus, keyed by doc_id (the reference
+    relies on row order; we carry an explicit key)."""
     return profiles.select(
         "doc_id",
         "sex",

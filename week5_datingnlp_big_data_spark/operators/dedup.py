@@ -928,8 +928,9 @@ def connected_components(
     output (components are a graph invariant, the label contract is the
     min reachable id) without paying a checkpoint + convergence-probe
     cluster round trip per propagation round. Driver footprint is
-    bounded by the threshold (~2 ids/edge); set it to 0 to force the
-    distributed path.
+    bounded by the threshold: the symmetrized table holds 2 rows of 2
+    ids per undirected edge, so ≤ ~4 ids per threshold edge. Set it to
+    0 to force the distributed path.
 
     Output: (node, component) — component = min doc id reachable."""
     # NOTE (optimization r9, tried and rejected): symmetrizing via a

@@ -13,8 +13,8 @@ MLlib semantics differ from caret/rpart (sampling vs exact partition,
 minInfoGain vs cp-pruning), so tests assert *invariants* — proportions,
 accuracy bands, monotone k-means cost — never exact trees (SURVEY.md
 section 5). The feature representation is the SparseVector view produced
-by a CountVectorizerModel over the SAME token arrays the long-form DFM uses; the
-reference's 6.17 GB dense-matrix blowup (W2) has no analog here.
+by a CountVectorizerModel over each doc's rows of the trimmed long-form DFM
+(EP-1); the reference's 6.17 GB dense-matrix blowup (W2) has no analog here.
 """
 
 from __future__ import annotations

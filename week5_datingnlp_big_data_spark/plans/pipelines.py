@@ -15,9 +15,10 @@ across its three sections (R:105 → R:234).
 Caches left for the caller (release them, e.g. ``spark.catalog
 .clearCache()``, once the results are consumed):
 
-- EP-1: the unstemmed token arrays, the distinct-term stem map, the
-  trimmed DFM (``EP1Result.counts`` — EP-2's ``tf_idf(counts)`` reads it),
-  the labeled feature vectors, ``train``, ``test`` and ``confusion``;
+- EP-1: the unstemmed tokenized corpus, the distinct-term stem map, the
+  trimmed DFM (``EP1Result.counts`` — the feature vectors are built from
+  it, and EP-2's ``tf_idf(counts)`` reads it), the labeled feature
+  vectors, ``train``, ``test`` and ``confusion``;
 - EP-3: the per-sex ``(sex, word, cnt)`` aggregate behind all four of
   its frames.
 """
@@ -35,7 +36,6 @@ from week5_datingnlp_big_data_spark.operators import corpus, dfm, freq, ml
 
 @dataclass
 class EP1Result:
-    tokenized: DataFrame
     counts: DataFrame            # trimmed long-form DFM
     train: DataFrame
     test: DataFrame
@@ -83,72 +83,65 @@ def ep1_classification(
     # (measured ~3x the corpus scan at 60k docs).
     raw.count()
 
-    exploded = raw.select("doc_id", F.posexplode("tokens").alias("_pos", "_raw"))
+    exploded = raw.select("doc_id", F.explode("tokens").alias("_raw"))
     stem_map = (
         exploded.select("_raw").distinct()
         .withColumn("_term", stemmer.stem_one_udf()("_raw"))
-        .persist()  # |vocab| rows; consumed by counts AND rebuild
+        # |vocab| rows. The trim below reads the grouped counts twice
+        # (term stats + semi-join); without the persist each read re-runs
+        # the stem UDF (measured ~2x featurize at 300 profiles).
+        .persist()
     )
-    # Ordered stemmed token stream, post-stem length filter as in the
-    # reference chain. The stem map joins by hash key with NO forced
-    # broadcast: the distinct vocabulary grows with the corpus (Heaps'
-    # law, unbounded at 100 TB), so AQE decides — it broadcasts when the
-    # measured size is small (every local run) and shuffles otherwise.
-    # Recomputations of this frame only re-run that map join against the
-    # cached raw tokens — all JVM-side.
-    stemmed = (
+    # Stemmed token stream, post-stem length filter as in the reference
+    # chain. The stem map joins by hash key with NO forced broadcast: the
+    # distinct vocabulary grows with the corpus (Heaps' law, unbounded at
+    # 100 TB), so AQE decides — it broadcasts when the measured size is
+    # small (every local run) and shuffles otherwise. The trimmed DFM is
+    # persisted: the vocabulary collect below fills it, the feature
+    # vectors are built from it, and EP-2's tf_idf(counts) reads it
+    # instead of re-running the stem-map join and the trim.
+    counts = dfm.trim_vocabulary(
         exploded.join(stem_map, "_raw")
         .filter(F.length("_term") >= 2)
-        .select("doc_id", "_pos", "_term")
-    )
-    # Persisted: the vocabulary collect below fills it, and EP-2's
-    # tf_idf(counts) reads it instead of re-running the stem-map join and
-    # the trim.
-    counts = dfm.trim_vocabulary(
-        stemmed.groupBy("doc_id", F.col("_term").alias("term")).agg(
-            F.count(F.lit(1)).alias("count")
-        ),
+        .groupBy("doc_id", F.col("_term").alias("term"))
+        .agg(F.count(F.lit(1)).alias("count")),
         min_docfreq,
         min_termfreq,
     ).persist()
-    # Stemmed token arrays (EP1Result.tokenized contract).
-    _as_arrays = lambda df: df.groupBy("doc_id").agg(  # noqa: E731
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_pos", "_term"))),
-            lambda s: s["_term"],
-        ).alias("_toks")
-    )
-    empty_arr = F.expr("cast(array() as array<string>)")
-    tokenized = (
-        raw.drop("tokens")
-        .join(_as_arrays(stemmed), "doc_id", "left")
-        .withColumn("tokens", F.coalesce("_toks", empty_arr))
-        .drop("_toks")
-    )
-    # Vector view against the trimmed vocabulary. The vocabulary is the
-    # DFM trim's term set, ordered by corpus frequency desc (matching what
-    # a fitted CountVectorizer would produce); terms outside it contribute
-    # nothing to the transform, so the stemmed token arrays feed the model
-    # directly — no explode → semi-join → re-collect rebuild, and no fit
-    # scan. Post-trim vocabulary is bounded (Heaps' law + df/tf floors),
-    # so collecting it into the model's broadcast dictionary stays small
-    # even at 100 TB corpus scale — the same driver-side footprint a
-    # fitted CountVectorizerModel carries. Sorted in Python, since the
-    # list is collected anyway: no range-partition sample job, no sort
-    # stage. Python compares str by codepoint, which is Spark's UTF-8
-    # binary string order, so the ties break as orderBy(desc(tf), term).
+    # The vocabulary is the trimmed term set, ordered by corpus frequency
+    # desc, as a fitted CountVectorizer orders it. The trim bounds it
+    # (Heaps' law + df/tf floors), so it stays small enough for the
+    # model's broadcast dictionary at any corpus size. Sorted in Python,
+    # since the list is collected anyway: no range-partition sample job,
+    # no sort stage. Python compares str by codepoint, which is Spark's
+    # UTF-8 binary string order, so the ties break as
+    # orderBy(desc(tf), term).
     term_tf = counts.groupBy("term").agg(F.sum("count").alias("_tf")).collect()
     vocab = [r["term"] for r in sorted(term_tf, key=lambda r: (-r["_tf"], r["term"]))]
-    vectorized = ml.vectorize_with_vocabulary(tokenized, vocab)
-
+    # The model's input is the trimmed DFM (dfm_trim → data frame,
+    # R:105–137): each doc's surviving terms, each repeated `count` times
+    # (CountVectorizerModel ignores token order). The left join keeps
+    # every doc; one with no surviving term gets an empty array, hence an
+    # all-zero vector.
+    bags = counts.groupBy("doc_id").agg(
+        F.flatten(F.collect_list(F.array_repeat("term", F.col("count").cast("int"))))
+        .alias("_toks")
+    )
+    tokenized = (
+        raw.select("doc_id", F.col("sex").alias("label"))
+        .join(bags, "doc_id", "left")
+        .withColumn("tokens", F.coalesce("_toks", F.expr("cast(array() as array<string>)")))
+    )
     # Narrow to the modeling columns and persist BEFORE the split: the
     # split's two sides would otherwise each re-run the vectorize
     # transform over the full corpus (the sample filter is narrow but the
     # anti-join side re-reads the whole chain). One materialization, both
-    # sides read the cache; the text columns stay out of executor memory.
-    labeled = vectorized.select(
-        "doc_id", F.col("sex").alias("label"), "features"
-    ).persist()
+    # sides read the cache; the token arrays stay out of executor memory.
+    labeled = (
+        ml.vectorize_with_vocabulary(tokenized, vocab)
+        .select("doc_id", "label", "features")
+        .persist()
+    )
     train, test = ml.stratified_split(labeled, "doc_id", train_fraction, seed)
     # Persist both splits: fit, predict and the evaluation are separate
     # actions — without this each one re-runs the tokenize → vectorize
@@ -176,7 +169,6 @@ def ep1_classification(
     if stage_timings is not None:
         stage_timings["predict_eval"] = round(_time.perf_counter() - _t0, 1)
     return EP1Result(
-        tokenized=tokenized,
         counts=counts,
         train=train,
         test=test,
