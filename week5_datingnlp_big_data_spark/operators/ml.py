@@ -82,11 +82,8 @@ def stratified_split(
     label-collecting job, and NULL-label rows are sampled like any other.
     Test side = anti-join on the id, so the two sides are disjoint and
     exhaustive regardless of sampling, even if a partition is recomputed."""
-    u = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string"))), 1, 13),
-        16,
-        10,
-    ).cast("double") / float(16**13)
+    key = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
+    u = F.conv(F.substring(key, 1, 13), 16, 10).cast("double") / float(16**13)
     train = df.filter(u < train_fraction)
     test = df.join(train.select(id_col), id_col, "left_anti")
     return train, test
