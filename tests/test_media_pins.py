@@ -1,9 +1,15 @@
-"""Output pins for the media queries that build their payloads from
-documents. Seven of them have no DuckDB twin (no WAV, YUV4MPEG2, JPEG or
-GIF parser in SQL), so without these pins only their row counts were
-checked; ``media_png_decode_stats`` is pinned too because it shares the
-same document→payload encoder. Each pin is the row count plus a sha256
-over the name-sorted columns and the sorted, normalized rows at sf0.001."""
+"""Output pins for rows-only query outputs: queries whose rows no DuckDB
+twin checks, so without a pin only their row counts were checked.
+
+- Seven media queries build their payloads from documents and have no
+  twin (no WAV, YUV4MPEG2, JPEG or GIF parser in SQL);
+  ``media_png_decode_stats`` is pinned too because it shares the same
+  document→payload encoder.
+- The seeded embedding top-k queries (BRP-LSH join, IVF, PQ, IVF-PQ) and
+  the MMR rerank over ``cosine_topk``'s pool are not SQL-expressible.
+
+Each pin is the row count plus a sha256 over the name-sorted columns and
+the sorted, normalized rows at sf0.001."""
 
 from __future__ import annotations
 
@@ -24,6 +30,11 @@ PINS = {
     "media_gif_decode_stats": (500, "aaac0ce18c212536"),
     "media_jpeg_color_stats": (500, "4c5b1a6336eda649"),
     "media_jpeg_progressive_stats": (500, "0536a3d46e96deda"),
+    "embedding_lsh_join_topk": (40, "91fe01735f03f74b"),
+    "embedding_ivf_topk": (40, "0aa1cbb61a4150a9"),
+    "embedding_pq_topk": (25, "76808c38469b75a4"),
+    "embedding_ivfpq_topk": (25, "734a32415481580c"),
+    "embedding_mmr_rerank": (10, "10dec78331bcb7c9"),
 }
 
 

@@ -53,6 +53,19 @@ def test_audit_exchange_budget(spark):
     assert any("exceeds the declared budget" in w for w in strict["warnings"])
 
 
+def test_audit_counts_one_plan_after_the_action(spark):
+    # Once a DataFrame has run, explain("formatted") prints AQE's final
+    # plan AND its initial plan; the node counts must cover one of them.
+    df = spark.range(1000).selectExpr("id % 7 as k").groupBy("k").count()
+    assert audit_plan(df)["n_exchanges"] == 1
+    df.collect()
+    assert audit_plan(df)["n_exchanges"] == 1
+    joined = df.join(spark.range(100).withColumnRenamed("id", "k"), "k")
+    joined.collect()
+    out = audit_plan(joined)
+    assert (out["n_exchanges"], out["n_broadcast_joins"]) == (1, 1)
+
+
 def test_audit_registered_flagships_are_clean(spark, sf_dir):
     from week5_datingnlp_big_data_spark.registry import QUERIES
 

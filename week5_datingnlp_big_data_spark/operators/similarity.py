@@ -8,9 +8,14 @@ Extension surface for LLM-data pipelines (SURVEY.md section 2.10): the
   cosine_near_dup_pairs — exact pairs above a cosine threshold within
                        LSH buckets (random-hyperplane signs, md5-derived →
                        deterministic + oracle-checkable)
-  brp_lsh_topk       — MLlib BucketedRandomProjectionLSH approx-NN (the
-                       100 TB path; rows-only checked, recall-tested
-                       against the brute force)
+  brp_lsh_topk_join  — MLlib BucketedRandomProjectionLSH approx-NN as one
+                       set-oriented join (the 100 TB path; rows-only
+                       checked, recall-tested against the brute force)
+
+Every top-k operator is candidate generation → score → rank (the split
+REPOSE, ICDE 2021, uses): ``_query_pairs`` is the brute-force candidate
+set, LSH/IVF/PQ generate fewer candidates, ``_adc_rerank`` is PQ's
+score-then-re-rank, and ``_topk`` is the one rank step.
 
 Scale: brute force is O(Q×N) — fine for Q small (reranking, eval); the
 LSH variants bound candidate generation by bucket collisions. All vector
@@ -19,7 +24,6 @@ math stays in whole-stage codegen (no Python) via higher-order functions.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -41,6 +45,34 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _topk(
+    scored: DataFrame, k: int, *order: Column, by: str = "query_id", rank_col: str = "rnk"
+) -> DataFrame:
+    """The rank step of every top-k here: number each ``by`` group's rows
+    in ``order`` into ``rank_col`` and keep ranks ≤ k."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return scored.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
+def _query_pairs(
+    side: DataFrame,
+    query_ids: list[int],
+    id_col: str,
+    renames: dict[str, str],
+    query_col: str = "query_id",
+) -> DataFrame:
+    """Brute-force candidates: every row of ``side`` paired with each
+    query row of ``side`` (broadcast; its id as ``query_col``, its
+    ``renames`` columns renamed), self-pairs excluded."""
+    queries = side.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias(query_col),
+        *[F.col(c).alias(alias) for c, alias in renames.items()],
+    )
+    return side.join(F.broadcast(queries), F.col(id_col) != F.col(query_col))
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -57,20 +89,13 @@ def cosine_topk(
     vecs = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     )
-    queries = vecs.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-    )
-    pairs = vecs.join(F.broadcast(queries), F.col(id_col) != F.col("query_id"))
-    scored = pairs.select(
+    scored = _query_pairs(vecs, query_ids, id_col, {"v": "qv"}).select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
         F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rnk")
+    return _topk(scored, k, F.desc("cos"), F.asc("neighbor_id")).select(
+        "query_id", "neighbor_id", "cos", "rnk"
     )
 
 
@@ -141,48 +166,6 @@ def cosine_near_dup_pairs(
     )
 
 
-def brp_lsh_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-) -> DataFrame:
-    """MLlib BucketedRandomProjectionLSH approximate top-k (Euclidean
-    proxy for cosine on ~normalized embeddings). The production-scale
-    path: candidates come from hash buckets, not a cross join. Seeded →
-    stable per Spark version, but not SQL-expressible → rows-only check +
-    recall test against cosine_topk."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    feat = embeddings.select(
-        F.col(id_col), array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    brp = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes",
-        bucketLength=bucket_length, numHashTables=num_hash_tables, seed=42,
-    )
-    model = brp.fit(feat)
-    queries = feat.filter(F.col(id_col).isin(query_ids)).collect()
-    out = None
-    for row in queries:
-        nn = model.approxNearestNeighbors(feat, row["features"], k + 1)
-        nn = (
-            nn.filter(F.col(id_col) != row[id_col])
-            .limit(k)
-            .select(
-                F.lit(row[id_col]).alias("query_id"),
-                F.col(id_col).alias("neighbor_id"),
-                F.col("distCol").alias("dist"),
-            )
-        )
-        out = nn if out is None else out.unionByName(nn)
-    return out
-
-
 def brp_lsh_topk_join(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -194,11 +177,10 @@ def brp_lsh_topk_join(
     dist_threshold: float = 8.0,
 ) -> DataFrame:
     """Set-oriented LSH top-k: ONE ``approxSimilarityJoin`` between the
-    query table and the corpus, then a per-query window rank — the
-    companion to ``brp_lsh_topk``'s per-vector loop, which launches one
-    Spark job per query and is only sane for a handful of vectors. This
-    form takes a query *table* of any size in a single bucketed join
-    (candidates = hash-bucket collisions, never Q×N), so it is the shape
+    query table and the corpus, then a per-query window rank. It takes a
+    query *table* of any size in a single bucketed join (candidates =
+    hash-bucket collisions, never Q×N) instead of one
+    ``approxNearestNeighbors`` job per query vector, so it is the shape
     that survives a 100 TB corpus with a large query set.
 
     ``dist_threshold`` bounds candidate distance; neighbors farther than
@@ -223,34 +205,40 @@ def brp_lsh_topk_join(
         F.col(f"datasetB.{id_col}").alias("neighbor_id"),
         F.round("dist", 6).alias("dist"),
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "dist", "rnk")
+    return _topk(scored, k, F.asc("dist"), F.asc("neighbor_id")).select(
+        "query_id", "neighbor_id", "dist", "rnk"
     )
 
 
-def cosine_pandas_udf(dim: int = 64):
-    """Vectorized Pandas-UDF cosine (Arrow-batched NumPy) — the
-    alternative formulation for when vector math must leave the JVM (e.g.
-    calling a real embedding library). The built-in ``cosine`` (zip_with/
-    aggregate, codegen'd) is the default hot path; this exists for parity
-    with Python-native pipelines and is equality-tested against it."""
+def _ivf_probe(
+    vecs: DataFrame,
+    query_ids: list[int],
+    id_col: str,
+    n_cells: int,
+    n_probe: int,
+    seed: int,
+) -> tuple[DataFrame, list[tuple[int, list[float], list[int]]]]:
+    """IVF's coarse quantizer: seeded k-means of ``vecs`` (id_col, v) into
+    ``n_cells`` cells. Returns the cached ``(id_col, v, cell)`` assignment
+    and, per query, ``(query_id, qv, cells)`` with its ``n_probe`` nearest
+    cells (a bounded query set, ranked in Python against the centers)."""
     import numpy as np
-    from pyspark.sql import types as T
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
 
-    @F.pandas_udf(T.DoubleType())
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.stack(a.to_numpy())
-        B = np.stack(b.to_numpy())
-        num = (A * B).sum(axis=1)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = num / den
-        return pd.Series(out)
-
-    return _cos
+    feat = vecs.withColumn("features", array_to_vector("v"))
+    model = KMeans(
+        k=n_cells, seed=seed, featuresCol="features", predictionCol="cell"
+    ).fit(feat)
+    assigned = model.transform(feat).select(id_col, "v", "cell").cache()
+    centers = [np.asarray(c) for c in model.clusterCenters()]
+    q_rows = assigned.filter(F.col(id_col).isin(query_ids)).select(id_col, "v").collect()
+    return assigned, [
+        (int(r[id_col]), r["v"], [int(i) for i in np.argsort(
+            [float(np.linalg.norm(np.array(r["v"]) - c)) for c in centers]
+        )[:n_probe]])
+        for r in q_rows
+    ]
 
 
 def ivf_topk(
@@ -272,29 +260,13 @@ def ivf_topk(
     Seeded k-means → stable within a Spark version, but not
     SQL-expressible → rows-only at the driver + recall-tested against
     cosine_topk."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
     vecs = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     )
-    feat = vecs.withColumn("features", array_to_vector("v"))
-    km = KMeans(k=n_cells, seed=seed, featuresCol="features", predictionCol="cell")
-    model = km.fit(feat)
-    assigned = model.transform(feat).select(id_col, "v", "cell").cache()
-
-    centers = [np.asarray(c) for c in model.clusterCenters()]
-    q_rows = assigned.filter(F.col(id_col).isin(query_ids)).select(id_col, "v").collect()
-
-    def nearest_cells(v):
-        d = [float(np.linalg.norm(np.array(v) - c)) for c in centers]
-        return [int(i) for i in np.argsort(d)[:n_probe]]
-
-    probe = [(r[id_col], r["v"], nearest_cells(r["v"])) for r in q_rows]
+    assigned, probe = _ivf_probe(vecs, query_ids, id_col, n_cells, n_probe, seed)
     probe_df = embeddings.sparkSession.createDataFrame(
         [(qid, qv, cell) for qid, qv, cells in probe for cell in cells],
-        f"query_id long, qv array<double>, cell int",
+        "query_id long, qv array<double>, cell int",
     )
     cands = assigned.join(F.broadcast(probe_df), "cell").filter(
         F.col(id_col) != F.col("query_id")
@@ -304,11 +276,8 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"),
         F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rnk")
+    return _topk(scored, k, F.desc("cos"), F.asc("neighbor_id")).select(
+        "query_id", "neighbor_id", "cos", "rnk"
     )
 
 
@@ -407,27 +376,31 @@ def pq_train(
     m × k* rows — a fixed-parameter bounded broadcast, engine-agnostic
     state like the Bloom word table. The m subspace fits run as a driver
     loop over m (a small constant), each a distributed MLlib k-means.
-    Seeded estimator → rows-only at the driver, recall-tested."""
+    Seeded estimator → rows-only, recall-tested. The m fits share one
+    cache of the vectors, released on return (the codebooks are built from
+    the collected centers, so nothing downstream reads it)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     vecs = embeddings.select(F.col(vec_col).cast("array<double>").alias("v")).cache()
-    dim = len(vecs.first()["v"])
-    sub_dim = dim // num_subspaces
-    spark = embeddings.sparkSession
-    rows = []
-    for j in range(num_subspaces):
-        sub = vecs.select(
-            array_to_vector(F.slice("v", j * sub_dim + 1, sub_dim)).alias("features")
-        )
-        model = KMeans(
-            k=codebook_size, seed=seed + j, featuresCol="features"
-        ).fit(sub)
-        rows += [
-            (j, c, [float(x) for x in center])
-            for c, center in enumerate(model.clusterCenters())
-        ]
-    return spark.createDataFrame(
+    try:
+        dim = len(vecs.first()["v"])
+        sub_dim = dim // num_subspaces
+        rows = []
+        for j in range(num_subspaces):
+            sub = vecs.select(
+                array_to_vector(F.slice("v", j * sub_dim + 1, sub_dim)).alias("features")
+            )
+            model = KMeans(
+                k=codebook_size, seed=seed + j, featuresCol="features"
+            ).fit(sub)
+            rows += [
+                (j, c, [float(x) for x in center])
+                for c, center in enumerate(model.clusterCenters())
+            ]
+    finally:
+        vecs.unpersist()
+    return embeddings.sparkSession.createDataFrame(
         rows, "subspace int, code int, centroid array<double>"
     )
 
@@ -439,6 +412,77 @@ def _sub_l2sq(sub_vec: Column, centroid: Column) -> Column:
         F.zip_with(sub_vec, centroid, lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
         lambda acc, x: acc + x,
+    )
+
+
+def _subspaces(vec: Column, m: int, sub_dim: int) -> Column:
+    """Explode ``vec`` into its ``m`` contiguous subvectors, as struct
+    ``s`` of ``(subspace int, sub_vec)`` — the PQ split that encoding and
+    the ADC lookup table share."""
+    return F.explode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda j: F.struct(
+                j.cast("int").alias("subspace"),
+                F.slice(vec, j * sub_dim + 1, sub_dim).alias("sub_vec"),
+            ),
+        )
+    ).alias("s")
+
+
+def _adc_rerank(
+    queries: DataFrame,
+    codebooks: DataFrame,
+    cand: DataFrame,
+    vectors: DataFrame,
+    lookup_keys: list[str],
+    m: int,
+    sub_dim: int,
+    k: int,
+    rerank_factor: int,
+) -> DataFrame:
+    """PQ's score → rank stages, shared by ``pq_topk`` and ``ivf_pq_topk``:
+    each query's m×k* lookup table of subvector distances to every
+    centroid; a candidate's ADC distance is the sum of its m lookups (joined
+    on ``lookup_keys``); the ``k × rerank_factor`` shortlist per query is
+    re-ranked by exact L2 distance to its true vector.
+
+    ``queries`` is ``(query_id, qv)``, ``cand`` one ``(neighbor_id,
+    subspace, code)`` row per candidate code (plus ``query_id`` when the
+    candidates are per query), ``vectors`` is ``(neighbor_id, nv)``.
+    Output: ``(query_id, neighbor_id, dist, rnk)``, ascending exact
+    distance with an id tiebreak."""
+    lookup = (
+        queries.select("query_id", _subspaces(F.col("qv"), m, sub_dim))
+        .select("query_id", "s.subspace", "s.sub_vec")
+        .join(F.broadcast(codebooks), "subspace")
+        .select(
+            "query_id",
+            "subspace",
+            "code",
+            _sub_l2sq(F.col("sub_vec"), F.col("centroid")).alias("d2"),
+        )
+    )
+    scored = (
+        cand.join(F.broadcast(lookup), lookup_keys)
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc_dist"))
+    )
+    shortlist = _topk(
+        scored, k * rerank_factor, F.asc("adc_dist"), F.asc("neighbor_id"),
+        rank_col="_r",
+    ).select("query_id", "neighbor_id")
+    exact = (
+        shortlist.join(vectors, "neighbor_id")
+        .join(F.broadcast(queries), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(F.sqrt(_sub_l2sq(F.col("qv"), F.col("nv"))), 6).alias("dist"),
+        )
+    )
+    return _topk(exact, k, F.asc("dist"), F.asc("neighbor_id")).select(
+        "query_id", "neighbor_id", "dist", "rnk"
     )
 
 
@@ -454,23 +498,12 @@ def pq_encode(
     relational: explode to (vec, subspace) subvectors, broadcast-join the
     m×k* codebook, min_by over codes, ordered array rebuild. One narrow
     shuffle on vec_id; the corpus never leaves the executors."""
-    dim_row = embeddings.select(
+    sub_dim = embeddings.select(
         F.size(F.col(vec_col).cast("array<double>")).alias("d")
-    ).first()
-    sub_dim = dim_row["d"] // num_subspaces
+    ).first()["d"] // num_subspaces
     subs = embeddings.select(
         F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_subspaces - 1)),
-                lambda j: F.struct(
-                    j.cast("int").alias("subspace"),
-                    F.slice(
-                        F.col(vec_col).cast("array<double>"), j * sub_dim + 1, sub_dim
-                    ).alias("sub_vec"),
-                ),
-            )
-        ).alias("s"),
+        _subspaces(F.col(vec_col).cast("array<double>"), num_subspaces, sub_dim),
     ).select(id_col, "s.subspace", "s.sub_vec")
     assigned = (
         subs.join(F.broadcast(codebooks), "subspace")
@@ -526,70 +559,23 @@ def pq_topk(
     else:
         codebooks = pq_train(embeddings, num_subspaces, codebook_size, vec_col, seed)
         encoded = pq_encode(embeddings, codebooks, num_subspaces, id_col, vec_col)
-    dim_row = embeddings.select(
+    sub_dim = embeddings.select(
         F.size(F.col(vec_col).cast("array<double>")).alias("d")
-    ).first()
-    sub_dim = dim_row["d"] // num_subspaces
+    ).first()["d"] // num_subspaces
     queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    lookup = (
-        queries.select(
-            "query_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(num_subspaces - 1)),
-                    lambda j: F.struct(
-                        j.cast("int").alias("subspace"),
-                        F.slice(F.col("qv"), j * sub_dim + 1, sub_dim).alias("q_sub"),
-                    ),
-                )
-            ).alias("s"),
-        )
-        .select("query_id", "s.subspace", "s.q_sub")
-        .join(F.broadcast(codebooks), "subspace")
-        .select(
-            "query_id",
-            "subspace",
-            "code",
-            _sub_l2sq(F.col("q_sub"), F.col("centroid")).alias("d2"),
-        )
     )
     cand = encoded.select(
         F.col(id_col).alias("neighbor_id"),
         F.posexplode("codes").alias("subspace", "code"),
     ).filter(~F.col("neighbor_id").isin(query_ids))
-    scored = (
-        cand.join(F.broadcast(lookup), ["subspace", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc_dist"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("_r", F.row_number().over(w_adc))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
     corpus = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("nv"),
     )
-    exact = (
-        shortlist.join(corpus, "neighbor_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.sqrt(_sub_l2sq(F.col("qv"), F.col("nv"))), 6).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "dist", "rnk")
+    return _adc_rerank(
+        queries, codebooks, cand, corpus, ["subspace", "code"],
+        num_subspaces, sub_dim, k, rerank_factor,
     )
 
 
@@ -618,32 +604,14 @@ def ivf_pq_topk(
     one shared codebook table instead of per-cell state; the exact re-rank
     absorbs the modest ADC precision loss. Output:
     (query_id, neighbor_id, dist, rnk) by exact distance, id tiebreak."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     vecs = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     )
-    feat = vecs.withColumn("features", array_to_vector("v"))
-    coarse = KMeans(
-        k=n_cells, seed=seed, featuresCol="features", predictionCol="cell"
-    ).fit(feat)
-    assigned = coarse.transform(feat).select(id_col, "v", "cell").cache()
-
+    assigned, probe = _ivf_probe(vecs, query_ids, id_col, n_cells, n_probe, seed)
     codebooks = pq_train(embeddings, num_subspaces, codebook_size, vec_col, seed)
     encoded = pq_encode(embeddings, codebooks, num_subspaces, id_col, vec_col).join(
         assigned.select(id_col, "cell"), id_col
     )
-
-    centers = [np.asarray(c) for c in coarse.clusterCenters()]
-    q_rows = assigned.filter(F.col(id_col).isin(query_ids)).select(id_col, "v").collect()
-    probe = [
-        (int(r[id_col]), r["v"], [int(i) for i in np.argsort(
-            [float(np.linalg.norm(np.array(r["v"]) - c)) for c in centers]
-        )[:n_probe]])
-        for r in q_rows
-    ]
     spark = embeddings.sparkSession
     probe_cells = spark.createDataFrame(
         [(qid, cell) for qid, _qv, cells in probe for cell in cells],
@@ -651,29 +619,6 @@ def ivf_pq_topk(
     )
     queries = spark.createDataFrame(
         [(qid, qv) for qid, qv, _cells in probe], "query_id long, qv array<double>"
-    )
-
-    dim = len(probe[0][1]) if probe else 0
-    sub_dim = dim // num_subspaces
-    lookup = (
-        queries.select(
-            "query_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(num_subspaces - 1)),
-                    lambda j: F.struct(
-                        j.cast("int").alias("subspace"),
-                        F.slice(F.col("qv"), j * sub_dim + 1, sub_dim).alias("q_sub"),
-                    ),
-                )
-            ).alias("s"),
-        )
-        .select("query_id", "s.subspace", "s.q_sub")
-        .join(F.broadcast(codebooks), "subspace")
-        .select(
-            "query_id", "subspace", "code",
-            _sub_l2sq(F.col("q_sub"), F.col("centroid")).alias("d2"),
-        )
     )
     cand = (
         encoded.join(F.broadcast(probe_cells), "cell")
@@ -684,35 +629,12 @@ def ivf_pq_topk(
             F.posexplode("codes").alias("subspace", "code"),
         )
     )
-    scored = (
-        cand.join(F.broadcast(lookup), ["query_id", "subspace", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc_dist"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("_r", F.row_number().over(w_adc))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    exact = (
-        shortlist.join(
-            vecs.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")),
-            "neighbor_id",
-        )
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(F.sqrt(_sub_l2sq(F.col("qv"), F.col("nv"))), 6).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "dist", "rnk")
+    dim = len(probe[0][1]) if probe else 0
+    return _adc_rerank(
+        queries, codebooks, cand,
+        vecs.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv")),
+        ["query_id", "subspace", "code"], num_subspaces, dim // num_subspaces,
+        k, rerank_factor,
     )
 
 
@@ -782,25 +704,16 @@ def sq8_cosine_topk(
         F.col(id_col),
         sq8_codes(F.col(vec_col).cast("array<double>")).alias("q"),
     )
-    self_dot = F.aggregate(
-        F.zip_with("q", "q", lambda a, b: (a * b).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    coded = coded.withColumn("_n2", self_dot)
-    queries = coded.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("_n2").alias("_qn2"),
-    )
-    pairs = coded.join(
-        F.broadcast(queries), F.col(id_col) != F.col("query_id")
-    )
-    dot_ab = F.aggregate(
-        F.zip_with("qq", "q", lambda a, b: (a * b).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    def int_dot(u: str, v: str) -> Column:
+        return F.aggregate(
+            F.zip_with(u, v, lambda a, b: (a * b).cast("bigint")),
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
+        )
+
+    coded = coded.withColumn("_n2", int_dot("q", "q"))
+    pairs = _query_pairs(coded, query_ids, id_col, {"q": "qq", "_n2": "_qn2"})
+    dot_ab = int_dot("qq", "q")
     den = F.sqrt(F.col("_qn2").cast("double")) * F.sqrt(
         F.col("_n2").cast("double")
     )
@@ -811,14 +724,9 @@ def sq8_cosine_topk(
             "sq_cos"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc_nulls_last("sq_cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sq_cos", "rnk")
-    )
+    return _topk(
+        scored, k, F.desc_nulls_last("sq_cos"), F.asc("neighbor_id")
+    ).select("query_id", "neighbor_id", "sq_cos", "rnk")
 
 
 def coverage_sample(
@@ -845,8 +753,8 @@ def coverage_sample(
     engine/run/layout (same rule as corpus.stratified_fixed_sample).
 
     Scale shape: one scan computes the signature (num_planes codegen
-    dot products), one hash exchange on the cell key, one bounded
-    row_number window per cell. No joins, no collect; at 100 TB the
+    dot products), one hash exchange on the cell key, one bounded rank
+    window per cell. No joins, no collect; at 100 TB the
     2^num_planes cells each see a ~uniform slice, so no window
     partition is corpus-sized (raise num_planes with corpus size).
 
@@ -857,12 +765,9 @@ def coverage_sample(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     ).withColumn("cell", hyperplane_signature(F.col("v"), num_planes, dim))
     order_key = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
-    w = Window.partitionBy("cell").orderBy(order_key, F.col(id_col))
-    return (
-        vecs.withColumn("pick", F.row_number().over(w))
-        .filter(F.col("pick") <= per_bucket)
-        .select(id_col, "cell", "pick")
-    )
+    return _topk(
+        vecs, per_bucket, order_key, F.col(id_col), by="cell", rank_col="pick"
+    ).select(id_col, "cell", "pick")
 
 
 def margin_mined_pairs(
@@ -992,17 +897,13 @@ def margin_mined_pairs(
                 .persist()
             )
 
-    wx = Window.partitionBy("x_id").orderBy(F.desc("c6"), F.asc("y_id"))
     nx = (
-        scored.withColumn("r", F.row_number().over(wx))
-        .filter(F.col("r") <= k)
+        _topk(scored, k, F.desc("c6"), F.asc("y_id"), by="x_id", rank_col="r")
         .groupBy("x_id")
         .agg(F.sum("c6").alias("sx"), F.count(F.lit(1)).alias("kx"))
     )
-    wy = Window.partitionBy("y_id").orderBy(F.desc("c6"), F.asc("x_id"))
     ny = (
-        scored.withColumn("r", F.row_number().over(wy))
-        .filter(F.col("r") <= k)
+        _topk(scored, k, F.desc("c6"), F.asc("x_id"), by="y_id", rank_col="r")
         .groupBy("y_id")
         .agg(F.sum("c6").alias("sy"), F.count(F.lit(1)).alias("ky"))
     )
@@ -1028,12 +929,9 @@ def margin_mined_pairs(
             margin.alias("margin"),
         )
     )
-    wbest = Window.partitionBy("query_id").orderBy(
-        F.desc("margin"), F.asc("match_id")
-    )
     return (
-        ranked.withColumn("_b", F.row_number().over(wbest))
-        .filter((F.col("_b") == 1) & (F.col("margin") >= min_margin))
+        _topk(ranked, 1, F.desc("margin"), F.asc("match_id"), rank_col="_b")
+        .filter(F.col("margin") >= min_margin)
         .drop("_b")
     )
 
@@ -1136,8 +1034,8 @@ def contrastive_triples(
 
     Scale shape: one scored table — broadcast bounded anchor batch x
     corpus scan (same plan as cosine_topk) — persisted for the two
-    ranked picks; both picks are per-anchor row_number windows over the
-    same partitioning. Ties break on the smaller id, cosines round to
+    ranked picks; both picks are per-anchor rank windows over the same
+    partitioning. Ties break on the smaller id, cosines round to
     6dp: deterministic and fully oracle-expressible.
 
     Output: ``(anchor_id, pos_id, neg_id, pos_cos, neg_cos)``, one row
@@ -1146,11 +1044,8 @@ def contrastive_triples(
     vecs = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     )
-    anchors = vecs.filter(F.col(id_col).isin(anchor_ids)).select(
-        F.col(id_col).alias("anchor_id"), F.col("v").alias("av")
-    )
     scored = (
-        vecs.join(F.broadcast(anchors), F.col(id_col) != F.col("anchor_id"))
+        _query_pairs(vecs, anchor_ids, id_col, {"v": "av"}, query_col="anchor_id")
         .select(
             "anchor_id",
             F.col(id_col).alias("other_id"),
@@ -1158,26 +1053,18 @@ def contrastive_triples(
         )
         .persist()
     )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("other_id"))
-    pos = (
-        scored.filter(F.col("cos") >= pos_threshold)
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select(
-            "anchor_id",
-            F.col("other_id").alias("pos_id"),
-            F.col("cos").alias("pos_cos"),
-        )
+    order = (F.desc("cos"), F.asc("other_id"))
+    pos = _topk(
+        scored.filter(F.col("cos") >= pos_threshold), 1, *order,
+        by="anchor_id", rank_col="r",
+    ).select(
+        "anchor_id", F.col("other_id").alias("pos_id"), F.col("cos").alias("pos_cos")
     )
-    neg = (
-        scored.filter(F.col("cos") < pos_threshold - neg_margin)
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select(
-            "anchor_id",
-            F.col("other_id").alias("neg_id"),
-            F.col("cos").alias("neg_cos"),
-        )
+    neg = _topk(
+        scored.filter(F.col("cos") < pos_threshold - neg_margin), 1, *order,
+        by="anchor_id", rank_col="r",
+    ).select(
+        "anchor_id", F.col("other_id").alias("neg_id"), F.col("cos").alias("neg_cos")
     )
     return pos.join(neg, "anchor_id", "left").select(
         "anchor_id", "pos_id", "neg_id", "pos_cos", "neg_cos"
@@ -1233,11 +1120,7 @@ def sign_hamming_topk(
             F.col(vec_col).cast("array<double>"), dim
         ).alias("bits"),
     )
-    queries = vecs.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("bits").alias("qbits")
-    )
-    pairs = vecs.join(F.broadcast(queries), F.col(id_col) != F.col("query_id"))
-    scored = pairs.select(
+    scored = _query_pairs(vecs, query_ids, id_col, {"bits": "qbits"}).select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
         F.aggregate(
@@ -1250,13 +1133,8 @@ def sign_hamming_topk(
             lambda acc, c: acc + c,
         ).alias("hamming"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "hamming", "rnk")
+    return _topk(scored, k, F.asc("hamming"), F.asc("neighbor_id")).select(
+        "query_id", "neighbor_id", "hamming", "rnk"
     )
 
 

@@ -33,18 +33,53 @@ def _formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
+def _initial_only_ids(plan: str) -> set[int]:
+    """Operator ids that only AQE's ``== Initial Plan ==`` tree shows.
+
+    Once the DataFrame has run, "formatted" prints the final plan and the
+    initial plan; nodes the two share keep one id, the rest of the
+    initial plan gets ids (and detail sections) of its own."""
+    seen = {"Final": set(), "Initial": set()}
+    mode, col = None, 0
+    for line in plan.splitlines():
+        marker = re.search(r"== (Final|Initial) Plan ==", line)
+        if marker:
+            mode, col = marker.group(1), marker.start()
+            continue
+        if mode is None or len(line) - len(line.lstrip()) < col:
+            mode = None  # a blank or shallower line ends the tree
+            continue
+        node = re.search(r"\((\d+)\)", line)
+        if node:
+            seen[mode].add(int(node.group(1)))
+    return seen["Initial"] - seen["Final"]
+
+
 def audit_plan(df: DataFrame, max_exchanges: int | None = None) -> dict:
     """Structured audit of a DataFrame's compiled physical plan.
 
     Returns a dict with the raw measurements plus a ``warnings`` list of
     human-readable findings; an empty list means none of the hazard
     patterns appear. ``max_exchanges`` adds a budget check when the
-    caller knows how many shuffles the pipeline SHOULD need."""
+    caller knows how many shuffles the pipeline SHOULD need.
+
+    The node counts (``n_exchanges``, ``n_broadcast_joins``,
+    ``n_sort_merge_joins``) cover ONE plan: AQE's final plan once the
+    DataFrame has run, else the plan as compiled. Even so, a plan built
+    over an already-materialized cache can legitimately differ (rebuilt
+    after its cache filled, ``embedding_margin_pairs`` audits at 3
+    Exchanges instead of 5), so compare plans built in a fresh session or
+    after ``spark.catalog.clearCache()``."""
     plan = _formatted_plan(df)
     # "formatted" mode prints each operator TWICE — once in the tree
     # ("Exchange (4)") and once as a detail header ("(4) Exchange") — so
-    # instance counts come from the detail headers only.
-    ops = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    # instance counts come from the detail headers only, minus those of
+    # the initial plan when AQE printed a final one too.
+    initial_only = _initial_only_ids(plan)
+    ops = [
+        op for i, op in re.findall(r"^\((\d+)\) (\w+)", plan, re.M)
+        if int(i) not in initial_only
+    ]
     n_exchanges = sum(1 for o in ops if o == "Exchange")
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     read_schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)

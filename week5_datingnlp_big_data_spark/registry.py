@@ -2232,15 +2232,6 @@ def mllib_minhash_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.mllib_minhash_join(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
-@query("embedding_lsh_topk")
-def embedding_lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BucketedRandomProjectionLSH approximate nearest neighbors for the
-    same query set as embedding_cosine_topk (recall-tested in unit tests)."""
-    return similarity.brp_lsh_topk(
-        _t(spark, sf_dir, "embeddings"), query_ids=list(range(8)), k=5
-    )
-
-
 @query("embedding_kmeans_sizes")
 def embedding_kmeans_sizes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6 through the driver contract: k-means (restarts, fixed seed) over
@@ -2305,10 +2296,10 @@ def embedding_tsne_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("embedding_lsh_join_topk")
 def embedding_lsh_join_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-oriented BRP-LSH top-k: one approxSimilarityJoin for the whole
-    query table (the scale path for large query sets — the per-vector loop
-    in embedding_lsh_topk launches one job per query). Seeded hash family
-    → rows-only; recall-tested against cosine_topk in unit tests."""
+    """BucketedRandomProjectionLSH approximate nearest neighbors for the
+    same query set as embedding_cosine_topk: one approxSimilarityJoin for
+    the whole query table, not one job per query vector. Seeded hash
+    family → rows-only; recall-tested against cosine_topk in unit tests."""
     return similarity.brp_lsh_topk_join(
         _t(spark, sf_dir, "embeddings"), query_ids=list(range(8)), k=5
     )
