@@ -694,26 +694,6 @@ def test_batch_novelty_layout_invariant(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
-def test_persisted_band_index_matches_self_contained(spark, sf_dir, tmp_path):
-    from week5_datingnlp_big_data_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 3 != 0)
-    batch = docs.filter(F.col("doc_id") % 3 == 0)
-    idx_path = str(tmp_path / "band_index.parquet")
-    idx = dedup.build_near_dup_index(base, idx_path)
-    assert set(idx.columns) == {"doc_id", "band_idx", "band_key"}
-    # the artifact is band_idx-partitioned on disk (each band's probe
-    # join confined to its own files)
-    import os
-    assert any(d.startswith("band_idx=") for d in os.listdir(idx_path))
-    via_index = sorted(map(tuple, dedup.cross_corpus_near_dups(
-        base, batch, base_index=idx).collect()))
-    self_contained = sorted(map(tuple, dedup.cross_corpus_near_dups(
-        base, batch).collect()))
-    assert via_index == self_contained
-
-
 def test_sign_hamming_packing_matches_numpy(spark):
     import numpy as np
 

@@ -5,8 +5,9 @@ twin checks, so without a pin only their row counts were checked.
   twin (no WAV, YUV4MPEG2, JPEG or GIF parser in SQL);
   ``media_png_decode_stats`` is pinned too because it shares the same
   document→payload encoder.
-- The seeded embedding top-k queries (BRP-LSH join, IVF, PQ, IVF-PQ) and
-  the MMR rerank over ``cosine_topk``'s pool are not SQL-expressible.
+- The seeded embedding top-k queries (BRP-LSH join, IVF, PQ, IVF-PQ), the
+  MMR rerank over ``cosine_topk``'s pool and the k-means-celled semantic
+  dedup pairs are not SQL-expressible.
 
 Each pin is the row count plus a sha256 over the name-sorted columns and
 the sorted, normalized rows at sf0.001."""
@@ -35,6 +36,7 @@ PINS = {
     "embedding_pq_topk": (25, "76808c38469b75a4"),
     "embedding_ivfpq_topk": (25, "734a32415481580c"),
     "embedding_mmr_rerank": (10, "10dec78331bcb7c9"),
+    "embedding_semantic_dedup": (121, "de6c0bfae9edbaa6"),
 }
 
 

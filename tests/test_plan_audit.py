@@ -66,6 +66,15 @@ def test_audit_counts_one_plan_after_the_action(spark):
     assert (out["n_exchanges"], out["n_broadcast_joins"]) == (1, 1)
 
 
+def test_audit_counts_codegen_spans_after_the_action(spark):
+    # explain("formatted") marks whole-stage codegen as "[codegen id : n]"
+    # in the detail headers. The executed groupBy has two spans, the
+    # partial and the final aggregate, on either side of its Exchange.
+    df = spark.range(1000).selectExpr("id % 7 as k").groupBy("k").count()
+    df.collect()
+    assert audit_plan(df)["n_codegen_spans"] == 2
+
+
 def test_audit_registered_flagships_are_clean(spark, sf_dir):
     from week5_datingnlp_big_data_spark.registry import QUERIES
 

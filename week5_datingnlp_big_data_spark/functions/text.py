@@ -62,6 +62,12 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def has_content(c: Column | str) -> Column:
+    """True unless the text is NULL, empty or whitespace-only. Contentless
+    docs have no words or shingles, so the operators drop or zero them."""
+    return F.length(F.trim(F.coalesce(_col(c), F.lit("")))) > 0
+
+
 def clean_html(c: Column | str) -> Column:
     """X2 — replace HTML artifacts with a space (R:60)."""
     return F.regexp_replace(_col(c), HTML_PAT, " ")

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from week5_datingnlp_big_data_spark.functions.text import has_content
+
 # End-of-word sentinel (classic </w>): lets the vocabulary distinguish
 # "est" in "newest" from the word-final "est</w>" in "smallest".
 EOW = "</w>"
@@ -45,9 +47,7 @@ def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus word-frequency table ``(word, cnt)`` over whitespace-lowered
     tokens — the one pass over the full corpus BPE training needs."""
     words = F.split(F.trim(F.lower(F.col(text_col))), "\\s+")
-    nonempty = docs.filter(
-        F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0
-    )
+    nonempty = docs.filter(has_content(text_col))
     return (
         nonempty.select(F.explode(words).alias("word"))
         .filter(F.length("word") > 0)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from week5_datingnlp_big_data_spark.functions.text import (
     clean_html,
+    has_content,
     remove_custom_stopwords,
     remove_stopwords,
     tokenize,
@@ -115,7 +116,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    nonempty = docs.filter(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
+    nonempty = docs.filter(has_content(text_col))
     base = nonempty.select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), "\\s+").alias("w")
     )
@@ -334,8 +335,8 @@ def token_budget_mixture(
     codegen'd filter. Output: (doc_id, source, n_tokens, keep_rate)."""
     denom = 10_000
     n_tok = F.when(
-        F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) == 0, F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(F.col(text_col)), "\\s+")))
+        has_content(text_col), F.size(F.split(F.trim(F.col(text_col)), "\\s+"))
+    ).otherwise(F.lit(0))
     base = docs.select(
         F.col(id_col), F.col(source_col).alias("source"), n_tok.alias("n_tokens")
     )

@@ -5,13 +5,22 @@ extension surface (SURVEY.md section 2.10) and a first-class component for
 the 100 TB target:
 
   exact_dedup        — content-hash groupBy; one shuffle on a 64-hex key
-  ngram_shingles     — character/word n-gram sets (the MinHash input)
+  word_shingles      — distinct word n-gram sets (the MinHash input)
   minhash_signatures — k md5-derived min-hashes per doc, banded for LSH
   lsh_candidate_pairs— docs sharing a band bucket (the scale path: the
                        cross-join never happens; only bucket-mates meet)
   jaccard_near_dups  — candidate pairs verified by exact n-gram Jaccard
   simhash64          — 64-bit SimHash per doc (Hamming-ball near-dup)
   MinHashLSH (MLlib) — approxSimilarityJoin variant for vector pipelines
+
+Every near-dup method is a blocking key plus a score (the candidate →
+verify split REPOSE, ICDE 2021, uses): ``bucket_pairs`` is the one
+candidate self-join (MinHash bands, rare shingles, winnowing
+fingerprints, Hamming blocks, symbol groups, and similarity.py's
+hyperplane signatures and k-means cells), ``jaccard_verified`` the one
+exact-Jaccard verify, and ``_driver_components`` the small-graph escape
+of both connected-components operators. ExactSubstr's two operators
+share ``_sliding_gram_table`` and ``_dup_islands``.
 
 Determinism: every hash is md5- or polynomial-derived (no JVM/Python hash
 seeds), so the whole MinHash pipeline is reproducible AND expressible in
@@ -32,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from week5_datingnlp_big_data_spark.functions.text import has_content
 from week5_datingnlp_big_data_spark.session import spread
 
 # Winnowing k-gram hash: Horner polynomial over ASCII char codes. Both
@@ -94,7 +104,7 @@ def minhash_signatures(
     shuffle)."""
     # Contentless docs (NULL/whitespace-only) have no shingles to compare;
     # they belong to exact dedup, not near-dup candidacy.
-    nonempty = docs.filter(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
+    nonempty = docs.filter(has_content(text_col))
     digest = F.md5("shingle")
     p = F.lit(MINHASH_PRIME)
     shingled = spread(nonempty).select(
@@ -152,19 +162,25 @@ def lsh_candidate_pairs(
     The n² cross join is replaced by a bucket join whose per-bucket size is
     the collision count — at 100 TB this is THE reason MinHash/LSH scales."""
     banded = band_table(signatures, id_col, num_hashes, num_bands)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return bucket_pairs(banded, ["band_idx", "band_key"], id_col).distinct()
+
+
+def bucket_pairs(
+    blocked: DataFrame, keys: list[str], id_col: str, **scores: Column
+) -> DataFrame:
+    """The candidate step of every near-dup self-join: pair the rows of
+    ``blocked`` that agree on all of ``keys``, each pair once
+    (``a.{id_col} < b.{id_col}``). Returns ``(id_a, id_b, *scores)``;
+    each score is a Column written against the ``a``/``b`` aliases, e.g.
+    ``F.col("a.v")``. A bucket's cost is its collision count; the n²
+    cross join never runs. Callers add their own distinct, pair count
+    and threshold, so each plan keeps its shape."""
+    a, b = blocked.alias("a"), blocked.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return a.join(b, [*on, F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[c.alias(name) for name, c in scores.items()],
     )
 
 
@@ -173,6 +189,27 @@ def jaccard_similarity(docs_a: Column, docs_b: Column) -> Column:
     inter = F.size(F.array_intersect(docs_a, docs_b))
     union = F.size(F.array_union(docs_a, docs_b))
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
+def jaccard_verified(
+    cands: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    threshold: float,
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """The verify step: join each side's ``(id, shingles)`` frame onto the
+    candidate pairs ``cands`` (keyed ``a`` and ``b``) and keep the pairs
+    whose exact Jaccard, rounded to 6 places, is ≥ ``threshold``.
+    Returns ``(a, b, jaccard)``."""
+    return (
+        cands.join(sh_a.toDF(a, "sh_a"), a)
+        .join(sh_b.toDF(b, "sh_b"), b)
+        .withColumn("jaccard", F.round(jaccard_similarity(F.col("sh_a"), F.col("sh_b")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
 
 
 def jaccard_near_dups(
@@ -213,13 +250,7 @@ def jaccard_near_dups(
     sh = docs.join(cand_ids, id_col, "left_semi").select(
         F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles")
     ).persist()
-    return (
-        cands.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
-        .withColumn("jaccard", F.round(jaccard_similarity(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return jaccard_verified(cands, sh, sh, threshold)
 
 
 def cross_corpus_near_dups(
@@ -231,34 +262,22 @@ def cross_corpus_near_dups(
     num_hashes: int = 12,
     num_bands: int = 4,
     shingle_n: int = 3,
-    base_index: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dups of a NEW batch against an EXISTING corpus — the
     production shape for continuously crawled data: nobody re-deduplicates
     100 TB per ingest; the day's batch is banded and joined against the
-    accumulated corpus index. Same Kirsch-Mitzenmacher MinHash + banded
+    accumulated corpus bands. Same Kirsch-Mitzenmacher MinHash + banded
     LSH + exact-Jaccard verify as jaccard_near_dups, but the candidate
     join is batch x base (asymmetric — no self pairs, no `<` tiebreak,
     and at scale the batch side is tiny relative to the corpus so AQE
-    broadcasts it into the band join).
+    broadcasts it into the band join). streaming_minhash_near_dups
+    (streaming/counts.py) accumulates the same band table as stream state.
 
     Returns ``(batch_id, base_id, jaccard)`` with jaccard >= threshold.
-
-    Scale shape: pass ``base_index`` (a band table from
-    ``build_near_dup_index`` — typically the parquet artifact a pipeline
-    keeps between ingests, partitioned by band_idx) to skip re-hashing
-    the corpus entirely; candidate generation then reads only the band
-    partitions the batch probes. Without it the base bands are rebuilt
-    from the frame so the operator stays self-contained and
-    oracle-checkable. (streaming/counts.py:streaming_minhash_near_dups
-    accumulates the same band table as stream state.)
     """
     sig_batch = minhash_signatures(batch, text_col, id_col, num_hashes, shingle_n)
-    if base_index is None:
-        sig_base = minhash_signatures(base, text_col, id_col, num_hashes, shingle_n)
-        bb = band_table(sig_base, id_col, num_hashes, num_bands)
-    else:
-        bb = base_index.select(id_col, "band_idx", "band_key")
+    sig_base = minhash_signatures(base, text_col, id_col, num_hashes, shingle_n)
+    bb = band_table(sig_base, id_col, num_hashes, num_bands)
     nb = band_table(sig_batch, id_col, num_hashes, num_bands)
     cands = (
         nb.alias("n")
@@ -274,61 +293,18 @@ def cross_corpus_near_dups(
         .distinct()
         .persist()  # feeds both semi-joins and the verify join
     )
-    shb = (
-        batch.join(
-            cands.select(F.col("batch_id").alias(id_col)), id_col, "left_semi"
-        )
-        .select(F.col(id_col).alias("batch_id"),
-                word_shingles(text_col, shingle_n).alias("sh_n"))
-    )
-    sho = (
-        base.join(
-            cands.select(F.col("base_id").alias(id_col)), id_col, "left_semi"
-        )
-        .select(F.col(id_col).alias("base_id"),
-                word_shingles(text_col, shingle_n).alias("sh_b"))
-    )
-    return (
-        cands.join(shb, "batch_id")
-        .join(sho, "base_id")
-        .withColumn(
-            "jaccard", F.round(jaccard_similarity(F.col("sh_n"), F.col("sh_b")), 6)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("batch_id", "base_id", "jaccard")
-    )
 
+    def shingled(side: DataFrame, key: str) -> DataFrame:
+        # verify shingling runs only over the side's candidate docs
+        ids = cands.select(F.col(key).alias(id_col))
+        return side.join(ids, id_col, "left_semi").select(
+            F.col(id_col), word_shingles(text_col, shingle_n)
+        )
 
-def build_near_dup_index(
-    docs: DataFrame,
-    path: str | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 12,
-    num_bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """The PERSISTED side of incremental near-dedup: the corpus's exploded
-    LSH band table ``(doc_id, band_idx, band_key)`` — what an ingest
-    pipeline builds ONCE per corpus snapshot and joins every day's batch
-    against, instead of re-hashing 100 TB per ingest. When ``path`` is
-    given the table is written as parquet PARTITIONED BY band_idx and
-    read back: the big win is skipping the corpus re-hash entirely; the
-    band_idx layout additionally confines each band's probe join to its
-    own files (and lets a restricted probe — e.g. re-checking one band
-    after a parameter change — prune the rest). The verify step still
-    needs the base documents for exact Jaccard — the index accelerates
-    candidate generation, which is the expensive part.
-
-    Probe with the SAME num_hashes/num_bands/shingle_n the index was
-    built with: band keys are opaque concatenations, so mismatched
-    parameters produce an empty candidate set, not an error."""
-    sig = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_n)
-    bands = band_table(sig, id_col, num_hashes, num_bands)
-    if path is None:
-        return bands
-    bands.write.mode("overwrite").partitionBy("band_idx").parquet(path)
-    return docs.sparkSession.read.parquet(path)
+    return jaccard_verified(
+        cands, shingled(batch, "batch_id"), shingled(base, "base_id"),
+        threshold, "batch_id", "base_id",
+    )
 
 
 def batch_novelty(
@@ -431,7 +407,7 @@ def ngram_jaccard_near_dups(
     1.12M → ~20k pairs at sf0.1). Output: (id_a, id_b, jaccard)."""
     sh = (
         spread(docs)
-        .filter(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
+        .filter(has_content(text_col))
         .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles"))
         .persist()  # feeds the blocking explode AND both verify sides
     )
@@ -470,15 +446,8 @@ def ngram_jaccard_near_dups(
         )
     )
     cands = (
-        blocked.alias("a")
-        .join(
-            blocked.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        bucket_pairs(blocked, ["shingle"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("rare_int"))
     )
     pruned = (
@@ -505,19 +474,7 @@ def ngram_jaccard_near_dups(
         )
         .select("id_a", "id_b")
     )
-    return (
-        pruned.join(
-            sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
-            "id_b",
-        )
-        .withColumn("jaccard", F.round(jaccard_similarity(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return jaccard_verified(pruned, sh, sh, threshold)
 
 
 def winnowing_fingerprints(
@@ -618,16 +575,9 @@ def winnow_dup_pairs(
     )
     # Persist: both sides of the self-join read this (small) filtered set.
     filtered = exploded.join(rare.select("fp"), "fp", "left_semi").persist()
-    a, b = filtered.alias("a"), filtered.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        bucket_pairs(filtered, ["fp"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_fp"))
         .filter(F.col("shared_fp") >= min_shared)
     )
@@ -682,9 +632,10 @@ def hamming_near_dup_pairs(
 ) -> DataFrame:
     """Generic Hamming-ball pair join for any ≤64-bit fingerprint column:
     block the fingerprint into ``num_blocks`` pieces; by pigeonhole, any
-    pair within ``max_hamming < num_blocks`` agrees on ≥1 block → join per
-    block, then verify Hamming ≤ max_hamming. Same ban-the-cross-join
-    trick as LSH. Shared by SimHash (text) and dHash (image) near-dup.
+    pair within ``max_hamming < num_blocks`` agrees on ≥1 block, so the
+    ``bucket_pairs`` self-join on (block_idx, block_key) finds it; then
+    verify Hamming ≤ max_hamming. Shared by SimHash (text) and dHash
+    (image) near-dup.
 
     Output: ``(id_a, id_b, hamming)`` with id_a < id_b."""
     width = 64 // num_blocks
@@ -702,19 +653,9 @@ def hamming_near_dup_pairs(
     blocked = sig.select(id_col, sig_col, F.explode(blocks).alias("blk")).select(
         id_col, sig_col, "blk.block_idx", "blk.block_key"
     )
-    a, b = blocked.alias("a"), blocked.alias("b")
+    hamming = hamming64(F.col(f"a.{sig_col}"), F.col(f"b.{sig_col}"))
     return (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming64(F.col(f"a.{sig_col}"), F.col(f"b.{sig_col}")).alias("hamming"),
-        )
+        bucket_pairs(blocked, ["block_idx", "block_key"], id_col, hamming=hamming)
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -734,8 +675,9 @@ def symbol_near_dup_pairs(
     ``xxhash64(group_idx, group_slice)`` — by pigeonhole, a pair with
     ≤ max_mismatch differing symbols agrees on at least one WHOLE
     group, and a hash collision can only add a candidate (the exact
-    verify below removes it), never lose a true pair — then verify the
-    exact mismatch count JVM-side with zip_with + aggregate.
+    verify below removes it), never lose a true pair. The candidates
+    come from the ``bucket_pairs`` self-join on (grp, gkey); the exact
+    mismatch count is then verified JVM-side with zip_with + aggregate.
 
     Scale: this is the wide-fingerprint successor of
     ``hamming_near_dup_pairs``'s fixed 16-bit bit-windows. The join
@@ -772,7 +714,6 @@ def symbol_near_dup_pairs(
     blocked = sig.select(id_col, syms_col, F.explode(groups).alias("b")).select(
         id_col, syms_col, "b.grp", "b.gkey"
     )
-    a, b = blocked.alias("a"), blocked.alias("b")
     mism = F.aggregate(
         F.zip_with(
             F.col(f"a.{syms_col}"),
@@ -783,17 +724,7 @@ def symbol_near_dup_pairs(
         lambda acc, v: acc + v,
     )
     return (
-        a.join(
-            b,
-            (F.col("a.grp") == F.col("b.grp"))
-            & (F.col("a.gkey") == F.col("b.gkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            mism.alias("n_mismatch"),
-        )
+        bucket_pairs(blocked, ["grp", "gkey"], id_col, n_mismatch=mism)
         .distinct()
         .filter(F.col("n_mismatch") <= max_mismatch)
     )
@@ -893,6 +824,19 @@ def _components_py(edge_rows) -> dict:
     return {v: roots[find(v)] for v in parent}
 
 
+def _driver_components(edges: DataFrame) -> DataFrame:
+    """The small-graph escape of both connected-components operators:
+    collect the materialized two-column edge table, run ``_components_py``
+    on the driver, release the table's checkpoint, and return
+    ``(node, component)`` with the edge table's id type."""
+    node_type = edges.schema[0].dataType.simpleString()
+    comp = _components_py([tuple(r) for r in edges.collect()])
+    _release_local_checkpoint(edges)
+    return edges.sparkSession.createDataFrame(
+        sorted(comp.items()), f"node {node_type}, component {node_type}"
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -954,17 +898,8 @@ def connected_components(
     # 1 per self-loop), so compare against twice the threshold — the same
     # threshold value now engages the escape at the same graph size as
     # connected_components_star. Driver footprint ≤ ~4 ids/threshold-edge.
-    m = sym.count()
-    if m <= 2 * driver_threshold_edges:
-        spark = edges.sparkSession
-        node_type = sym.schema["src"].dataType.simpleString()
-        comp = _components_py(
-            [(r["src"], r["dst"]) for r in sym.collect()]
-        )
-        _release_local_checkpoint(sym)
-        return spark.createDataFrame(
-            sorted(comp.items()), f"node {node_type}, component {node_type}"
-        )
+    if sym.count() <= 2 * driver_threshold_edges:
+        return _driver_components(sym)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -1045,15 +980,8 @@ def connected_components_star(
     # threshold. Every node (self-loops were dropped above) appears as
     # an endpoint of cur, so the collected fixpoint covers the full
     # node set.
-    m = cur.count()
-    if m <= driver_threshold_edges:
-        spark = edges.sparkSession
-        node_type = cur.schema["u"].dataType.simpleString()
-        comp = _components_py([(r["u"], r["v"]) for r in cur.collect()])
-        _release_local_checkpoint(cur)
-        return spark.createDataFrame(
-            sorted(comp.items()), f"node {node_type}, component {node_type}"
-        )
+    if cur.count() <= driver_threshold_edges:
+        return _driver_components(cur)
     # node axis derived from the materialized canonical edges — the r8
     # build derived it from e0, which re-ran the (possibly expensive)
     # upstream pair-mining plan a second time for the eager checkpoint
@@ -1162,7 +1090,7 @@ def ngram_overlap_flags(
     def grams(frame: DataFrame) -> DataFrame:
         return (
             spread(frame)
-            .filter(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
+            .filter(has_content(text_col))
             .select(F.col(id_col), F.explode(word_shingles(text_col, n)).alias("gram"))
         )
 
@@ -1253,7 +1181,7 @@ def span_dup_fractions(
     n_spans = F.floor(F.size(words) / span_words).cast("int")
     spans = (
         spread(docs)
-        .filter(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
+        .filter(has_content(text_col))
         .select(
             F.col(id_col),
             F.explode(
@@ -1451,7 +1379,7 @@ def remove_duplicate_spans(
         .select(
             F.col(id_col),
             F.when(
-                F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0, words
+                has_content(text_col), words
             ).otherwise(F.array().cast("array<string>")).alias("ws"),
         )
         .select(
@@ -1560,24 +1488,18 @@ def soft_dedup_weights(
 
 
 def _sliding_gram_table(
-    docs: DataFrame, text_col: str, id_col: str, min_len: int
+    base: DataFrame, id_col: str, min_len: int, *carry: str
 ) -> DataFrame:
-    """Stride-1 word ``min_len``-gram hash table: one narrow
-    ``(doc_id, n_words, pos, gram_hash)`` row per word position (docs
-    shorter than ``min_len`` words yield no rows). The overlapping-window
-    counterpart of ``span_dup_fractions``' blocked spans — position ``i``
-    covers words ``[i, i + min_len)``."""
-    words = F.split(F.trim(F.col(text_col)), "\\s+")
-    base = (
-        spread(docs)
-        .filter(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0)
-        .select(F.col(id_col), words.alias("ws"))
-        .select(id_col, "ws", F.size("ws").alias("n_words"))
-    )
-    n_grams = F.col("n_words") - min_len + 1
+    """Stride-1 word ``min_len``-gram hash table over a ``(doc_id, ws)``
+    word-array frame: one narrow ``(doc_id, *carry, pos, gram_hash)`` row
+    per word position, where position ``i`` covers ``ws[i, i + min_len)``
+    (arrays shorter than ``min_len`` yield no rows). The overlapping-window
+    counterpart of ``span_dup_fractions``' blocked spans; ``carry`` names
+    columns of ``base`` kept on every row."""
+    n_grams = F.size("ws") - min_len + 1
     return base.select(
         id_col,
-        "n_words",
+        *carry,
         F.posexplode(
             F.when(
                 n_grams >= 1,
@@ -1587,6 +1509,48 @@ def _sliding_gram_table(
                 ),
             ).otherwise(F.array().cast("array<string>"))
         ).alias("pos", "gram_hash"),
+    )
+
+
+def _dup_islands(
+    grams: DataFrame, id_col: str, min_len: int, *carry: str
+) -> DataFrame:
+    """Maximal duplicated spans of a gram table: the positions whose gram
+    occurs more than once anywhere, merged per doc by gaps-and-islands
+    (a position starts a new island unless it lies inside the previous
+    positions' windows). Returns ``(doc_id, island, *carry, span_start,
+    span_end)`` with ``span_end`` exclusive; ``carry`` columns are
+    per-doc and kept.
+
+    The duplicated-gram dictionary joins back BY HASH KEY — never
+    broadcast (at crawl scale it is itself huge; AQE picks the
+    strategy). The island windows are partitioned by doc_id: per-doc
+    state only, one hash exchange."""
+    dup_hashes = (
+        grams.groupBy("gram_hash")
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .filter(F.col("n_occ") > 1)
+        .select("gram_hash")
+    )
+    dup_pos = grams.join(dup_hashes, "gram_hash").select(id_col, *carry, "pos")
+    w = Window.partitionBy(id_col).orderBy("pos")
+    prev_end = F.max(F.col("pos") + min_len).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    new_island = (
+        F.when(prev_end.isNull() | (F.col("pos") > prev_end), 1).otherwise(0)
+    )
+    return (
+        dup_pos.withColumn("_new", new_island)
+        .withColumn(
+            "island", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        )
+        .groupBy(id_col, "island")
+        .agg(
+            *[F.any_value(c).alias(c) for c in carry],
+            F.min("pos").alias("span_start"),
+            (F.max("pos") + min_len).alias("span_end"),
+        )
     )
 
 
@@ -1617,38 +1581,18 @@ def exact_substr_spans(
     per word position — corpus token volume, never materialized wider.
     It feeds BOTH the frequency aggregate and the join-back, so it is
     persisted (the measured double-tokenize hazard). Frequency is a
-    map-side-combined groupBy on the uniform md5 key; the duplicated-gram
-    dictionary joins back BY HASH KEY — never broadcast (at crawl scale it
-    is itself huge; AQE picks the strategy). Island merging is two
-    windows partitioned by doc_id — per-doc state only, one hash
-    exchange. No step is quadratic; no driver collect."""
-    grams = _sliding_gram_table(docs, text_col, id_col, min_len).persist()
-    dup_hashes = (
-        grams.groupBy("gram_hash")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .filter(F.col("n_occ") > 1)
-        .select("gram_hash")
+    map-side-combined groupBy on the uniform md5 key; ``_dup_islands``
+    does the join-back and the island merge. No step is quadratic; no
+    driver collect."""
+    words = F.split(F.trim(F.col(text_col)), "\\s+")
+    base = (
+        spread(docs)
+        .filter(has_content(text_col))
+        .select(F.col(id_col), words.alias("ws"))
+        .select(id_col, "ws", F.size("ws").alias("n_words"))
     )
-    dup_pos = grams.join(dup_hashes, "gram_hash").select(id_col, "n_words", "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_end = F.max(F.col("pos") + min_len).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    new_island = (
-        F.when(prev_end.isNull() | (F.col("pos") > prev_end), 1).otherwise(0)
-    )
-    islands = (
-        dup_pos.withColumn("_new", new_island)
-        .withColumn(
-            "island", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-        .groupBy(id_col, "island")
-        .agg(
-            F.any_value("n_words").alias("n_words"),
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + min_len).alias("span_end"),
-        )
-    )
+    grams = _sliding_gram_table(base, id_col, min_len, "n_words").persist()
+    islands = _dup_islands(grams, id_col, min_len, "n_words")
     span_len = F.col("span_end") - F.col("span_start")
     return islands.groupBy(id_col).agg(
         F.any_value("n_words").cast("bigint").alias("n_words"),
@@ -1666,12 +1610,13 @@ def exact_substr_rewrite(
     min_len: int = 50,
 ) -> DataFrame:
     """Destructive ExactSubstr dedup: REWRITE each document with every
-    maximal duplicated span (as found by ``exact_substr_spans`` — same
-    stride-1 grams, same occurrence-count rule, same island merge)
-    removed. Lee et al. 2021's cleaning action proper; the span table is
-    the audit signal. Every document passes through (docs with no
-    duplicated span keep their words verbatim, whitespace-normalized —
-    the rewrite is word-level, matching ``remove_duplicate_spans``).
+    maximal duplicated span (as found by ``exact_substr_spans`` — the same
+    ``_sliding_gram_table`` and ``_dup_islands``, so the same stride-1
+    grams, occurrence-count rule and island merge) removed. Lee et al.
+    2021's cleaning action proper; the span table is the audit signal.
+    Every document passes through (docs with no duplicated span keep
+    their words verbatim, whitespace-normalized — the rewrite is
+    word-level, matching ``remove_duplicate_spans``).
 
     Output: ``(doc_id, text_clean, n_words, n_dup_tokens)``.
 
@@ -1679,67 +1624,27 @@ def exact_substr_rewrite(
     array (≤ n_words/min_len entries) and the kept text is rebuilt with
     higher-order functions — filter over the word-index sequence with an
     exists() probe against the island array, O(n_words × n_islands) per
-    doc, JVM-side. One extra join back to the corpus on doc_id; the gram
-    side is identical to the span operator."""
+    doc, JVM-side. The word-array frame is persisted: it feeds the gram
+    table AND the join back to every doc on doc_id."""
     words = F.split(F.trim(F.col(text_col)), "\\s+")
     base = (
         spread(docs)
         .select(
             F.col(id_col),
-            F.when(
-                F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0, words
-            )
+            F.when(has_content(text_col), words)
             .otherwise(F.array().cast("array<string>"))
             .alias("ws"),
         )
         .persist()
     )
-    # Grams directly from the word array (no re-join/re-split round trip);
-    # positions index into base.ws exactly as in _sliding_gram_table.
-    n_grams = F.size("ws") - min_len + 1
-    grams = base.select(
-        id_col,
-        F.posexplode(
-            F.when(
-                n_grams >= 1,
-                F.transform(
-                    F.sequence(F.lit(0), n_grams - 1),
-                    lambda i: F.md5(
-                        F.concat_ws(" ", F.slice(F.col("ws"), i + 1, min_len))
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("pos", "gram_hash"),
-    ).persist()
-    dup_hashes = (
-        grams.groupBy("gram_hash")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .filter(F.col("n_occ") > 1)
-        .select("gram_hash")
-    )
-    dup_pos = grams.join(dup_hashes, "gram_hash").select(id_col, "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_end = F.max(F.col("pos") + min_len).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
+    grams = _sliding_gram_table(base, id_col, min_len).persist()
     islands = (
-        dup_pos.withColumn(
-            "_new",
-            F.when(prev_end.isNull() | (F.col("pos") > prev_end), 1).otherwise(0),
-        )
-        .withColumn(
-            "island", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-        .groupBy(id_col, "island")
-        .agg(
-            F.min("pos").alias("s"),
-            (F.max("pos") + min_len).alias("e"),
-        )
+        _dup_islands(grams, id_col, min_len)
         .groupBy(id_col)
-        .agg(F.collect_list(F.struct("s", "e")).alias("spans"))
+        .agg(F.collect_list(F.struct("span_start", "span_end")).alias("spans"))
     )
     covered = lambda j: F.exists(  # noqa: E731
-        F.col("spans"), lambda sp: (sp["s"] <= j) & (j < sp["e"])
+        F.col("spans"), lambda sp: (sp["span_start"] <= j) & (j < sp["span_end"])
     )
     kept = F.filter(
         F.sequence(F.lit(0), F.size("ws") - 1),
@@ -1764,7 +1669,7 @@ def exact_substr_rewrite(
                 F.aggregate(
                     F.col("spans"),
                     F.lit(0).cast("bigint"),
-                    lambda acc, sp: acc + (sp["e"] - sp["s"]),
+                    lambda acc, sp: acc + (sp["span_end"] - sp["span_start"]),
                 ),
                 F.lit(0).cast("bigint"),
             ).alias("n_dup_tokens"),

@@ -28,6 +28,8 @@ from pyspark.ml.feature import PCA, StandardScaler, StringIndexer
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from week5_datingnlp_big_data_spark.functions.text import has_content
+
 
 def vectorize_with_vocabulary(
     tokenized: DataFrame,
@@ -327,7 +329,7 @@ def train_quality_classifier(
         ]
     )
     model = pipe.fit(
-        labeled.filter(F.length(F.trim(F.coalesce("text", F.lit("")))) > 0)
+        labeled.filter(has_content("text"))
     )
     path = spill_dir or tempfile.mkdtemp(prefix="quality-clf-")
     try:
@@ -351,7 +353,7 @@ def quality_classifier_scores(
 
     scored = model.transform(
         docs.select(F.col(id_col), F.col(text_col).alias("text")).filter(
-            F.length(F.trim(F.coalesce("text", F.lit("")))) > 0
+            has_content("text")
         )
     )
     return scored.select(

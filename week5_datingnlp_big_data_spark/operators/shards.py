@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from week5_datingnlp_big_data_spark.functions.text import has_content
+
 
 def assign_shards(
     df: DataFrame,
@@ -128,9 +130,7 @@ def shard_manifest(
         10,
     ).cast("long")
     words = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), "\\s+")
-    n_tokens = F.when(
-        F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0, F.size(words)
-    ).otherwise(F.lit(0))
+    n_tokens = F.when(has_content(text_col), F.size(words)).otherwise(F.lit(0))
     return (
         assigned.select(
             "shard", F.col(id_col), digest.alias("_d"), n_tokens.alias("_t")

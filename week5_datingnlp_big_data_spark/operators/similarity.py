@@ -15,7 +15,10 @@ Extension surface for LLM-data pipelines (SURVEY.md section 2.10): the
 Every top-k operator is candidate generation → score → rank (the split
 REPOSE, ICDE 2021, uses): ``_query_pairs`` is the brute-force candidate
 set, LSH/IVF/PQ generate fewer candidates, ``_adc_rerank`` is PQ's
-score-then-re-rank, and ``_topk`` is the one rank step.
+score-then-re-rank, and ``_topk`` is the one rank step. The near-dup
+pair operators (``cosine_near_dup_pairs``, ``semantic_dedup_pairs``) are
+``dedup.bucket_pairs`` over a hyperplane signature or a k-means cell,
+scored by cosine.
 
 Scale: brute force is O(Q×N) — fine for Q small (reranking, eval); the
 LSH variants bound candidate generation by bucket collisions. All vector
@@ -26,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from week5_datingnlp_big_data_spark.operators.dedup import bucket_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -150,20 +155,8 @@ def cosine_near_dup_pairs(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("sig", hyperplane_signature(F.col("v"), num_planes, dim))
-    a, b = vecs.alias("a"), vecs.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
+    cos = F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
+    return bucket_pairs(vecs, ["sig"], id_col, cos=cos).filter(F.col("cos") >= threshold)
 
 
 def brp_lsh_topk_join(
@@ -312,19 +305,9 @@ def semantic_dedup_pairs(
     km = KMeans(k=n_clusters, seed=seed, featuresCol="features", predictionCol="cell")
     model = km.fit(feat)
     assigned = model.transform(feat).select(id_col, "v", "cell")
-    a, b = assigned.alias("a"), assigned.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
+    cos = F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
+    return bucket_pairs(assigned, ["cell"], id_col, cos=cos).filter(
+        F.col("cos") >= threshold
     )
 
 

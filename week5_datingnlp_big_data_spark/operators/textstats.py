@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from week5_datingnlp_big_data_spark.functions.text import has_content
+
 # Marker-word profiles for the n-gram/stopword language heuristic. Small
 # on purpose: the intent is a cheap scan-speed filter, not a classifier.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -215,7 +217,7 @@ def _doc_term_counts_ws(docs: DataFrame, text_col: str, id_col: str) -> DataFram
     from week5_datingnlp_big_data_spark.session import spread
 
     words = F.split(F.trim(F.lower(_col(text_col))), "\\s+")
-    nonempty = docs.filter(F.length(F.trim(F.coalesce(_col(text_col), F.lit("")))) > 0)
+    nonempty = docs.filter(has_content(text_col))
     # spread() before the explode: a single-file parquet scan would run
     # the split+explode single-threaded ahead of the groupBy shuffle.
     return (
@@ -345,7 +347,7 @@ def bigram_logprob_scores(
     from week5_datingnlp_big_data_spark.session import spread
 
     words = F.split(F.trim(F.lower(_col(text_col))), "\\s+")
-    nonempty = docs.filter(F.length(F.trim(F.coalesce(_col(text_col), F.lit("")))) > 0)
+    nonempty = docs.filter(has_content(text_col))
     # Persist: the tokenized rows feed TWO consumers — the bigram explode
     # and the vocabulary-size aggregate — and the split would otherwise
     # re-run over the whole corpus for each. spread() first: the persist
@@ -427,7 +429,7 @@ def kn_bigram_logprob_scores(
     from week5_datingnlp_big_data_spark.session import spread
 
     words = F.split(F.trim(F.lower(_col(text_col))), "\\s+")
-    nonempty = docs.filter(F.length(F.trim(F.coalesce(_col(text_col), F.lit("")))) > 0)
+    nonempty = docs.filter(has_content(text_col))
     base = spread(nonempty).select(F.col(id_col), words.alias("ws"))
     grams = F.when(
         F.size("ws") >= 2,
@@ -524,7 +526,7 @@ def repetition_scores(
     way a UDF would. One-word docs have no 2-grams; their 2-gram
     fractions are defined as 0.0 (left join + coalesce, not a crash).
     """
-    nonempty = docs.filter(F.length(F.trim(F.coalesce(_col(text_col), F.lit("")))) > 0)
+    nonempty = docs.filter(has_content(text_col))
     words = F.split(F.trim(F.lower(_col(text_col))), "\\s+")
     base = nonempty.select(F.col(id_col), words.alias("ws"))
     grams2 = F.when(
@@ -661,7 +663,7 @@ def quality_ensemble(
     from pyspark.sql import Window
 
     q = quality_score(
-        docs.filter(F.length(F.trim(F.coalesce(_col(text_col), F.lit("")))) > 0),
+        docs.filter(has_content(text_col)),
         text_col,
     ).select(id_col, "quality")
     # persisted for the duration of THIS call only: doc_terms feeds the

@@ -13,7 +13,7 @@ Checks encode the brief's 100 TB rules:
   - cartesian / broadcast-nested-loop joins   → quadratic blowup
   - exchange count                            → shuffle budget
   - pushed filters + read schema              → scan does the pruning
-  - WholeStageCodegen coverage                → JVM-side, not interpreted
+  - whole-stage codegen spans                 → JVM-side, not interpreted
   - TakeOrderedAndProject                     → top-k without global sort
 """
 
@@ -69,17 +69,26 @@ def audit_plan(df: DataFrame, max_exchanges: int | None = None) -> dict:
     over an already-materialized cache can legitimately differ (rebuilt
     after its cache filled, ``embedding_margin_pairs`` audits at 3
     Exchanges instead of 5), so compare plans built in a fresh session or
-    after ``spark.catalog.clearCache()``."""
+    after ``spark.catalog.clearCache()``.
+
+    ``n_codegen_spans`` counts the distinct ``[codegen id : n]`` marks in
+    the same detail headers. Under AQE a plan that has not run yet has no
+    codegen stages (the adaptive plan compiles them stage by stage), so
+    it reads 0 until the DataFrame has run."""
     plan = _formatted_plan(df)
     # "formatted" mode prints each operator TWICE — once in the tree
     # ("Exchange (4)") and once as a detail header ("(4) Exchange") — so
     # instance counts come from the detail headers only, minus those of
     # the initial plan when AQE printed a final one too.
     initial_only = _initial_only_ids(plan)
-    ops = [
-        op for i, op in re.findall(r"^\((\d+)\) (\w+)", plan, re.M)
+    headers = [
+        (op, codegen)
+        for i, op, codegen in re.findall(
+            r"^\((\d+)\) (\w+)[^\n]*?(?:\[codegen id : (\d+)\])?$", plan, re.M
+        )
         if int(i) not in initial_only
     ]
+    ops = [op for op, _ in headers]
     n_exchanges = sum(1 for o in ops if o == "Exchange")
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     read_schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
@@ -89,7 +98,7 @@ def audit_plan(df: DataFrame, max_exchanges: int | None = None) -> dict:
         "n_exchanges": n_exchanges,
         "n_broadcast_joins": sum(1 for o in ops if o == "BroadcastHashJoin"),
         "n_sort_merge_joins": sum(1 for o in ops if o == "SortMergeJoin"),
-        "n_codegen_spans": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
+        "n_codegen_spans": len({c for _, c in headers if c}),
         "pushed_filters": [p for p in pushed if p.strip()],
         "read_schemas": read_schemas,
         "take_ordered": "TakeOrderedAndProject" in plan,

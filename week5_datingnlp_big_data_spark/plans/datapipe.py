@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from week5_datingnlp_big_data_spark.functions.text import has_content
 from week5_datingnlp_big_data_spark.operators import dedup, textstats
 
 
@@ -205,7 +206,7 @@ def prepare_corpus_v2(
     base = surv.select(
         F.col(id_col),
         F.when(
-            F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0,
+            has_content(text_col),
             F.size(words),
         )
         .otherwise(F.lit(0))

@@ -25,6 +25,7 @@ from week5_datingnlp_big_data_spark.functions.text import (
     TOKEN_HAS_LETTER_PAT,
     TOKEN_SPLIT_PAT,
     TOKEN_TRIM_PAT,
+    has_content,
     remove_stopwords,
     tokenize,
 )
@@ -8454,9 +8455,7 @@ def hashed_features_dfm_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     featurization job actually runs). md5-seedless, so the oracle
     recomputes the identical mapping; signed collisions cancelling to 0
     stay in the output. See operators/ml.py:hashed_features."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.length(F.trim(F.coalesce(F.col("text"), F.lit("")))) > 0
-    ).select(
+    docs = _t(spark, sf_dir, "documents").filter(has_content("text")).select(
         "doc_id", F.split(F.trim(F.lower("text")), "\\s+").alias("tokens")
     )
     return ml.hashed_features(docs)
@@ -8495,9 +8494,7 @@ def phrase_search_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     term_{i+1} at pos+1 (IIR §2.4.2 positional AND-merge). Per-phrase
     work is bounded by the rarest term's postings — the postings filter
     sits BEFORE every join. See operators/ir.py:phrase_match_counts."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.length(F.trim(F.coalesce(F.col("text"), F.lit("")))) > 0
-    ).select(
+    docs = _t(spark, sf_dir, "documents").filter(has_content("text")).select(
         "doc_id", F.split(F.trim(F.lower("text")), "\\s+").alias("tokens")
     )
     ws = F.col("tokens")
@@ -8588,9 +8585,7 @@ _SQL_NB_COMMON = """
 
 
 def _nb_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    nonempty = docs.filter(
-        F.length(F.trim(F.coalesce(F.col("text"), F.lit("")))) > 0
-    )
+    nonempty = docs.filter(has_content("text"))
     toks = nonempty.select(
         "doc_id",
         F.col("lang"),
@@ -9062,10 +9057,8 @@ def doc_readability_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     of [.!?]+ runs). Pure HOF/regex scan algebra — the formulas are one
     more scan predicate at 100 TB. See operators/textstats.py:
     readability_scores."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.length(F.trim(F.coalesce(F.col("text"), F.lit("")))) > 0
-    ).select("doc_id", "text")
-    return textstats.readability_scores(docs)
+    docs = _t(spark, sf_dir, "documents").filter(has_content("text"))
+    return textstats.readability_scores(docs.select("doc_id", "text"))
 
 
 def _sql_labelprop_chain(iters: int) -> str:

@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from week5_datingnlp_big_data_spark.functions.text import remove_stopwords, tokenize
+from week5_datingnlp_big_data_spark.functions.text import (
+    has_content, remove_stopwords, tokenize,
+)
 from week5_datingnlp_big_data_spark.operators.corpus import clean_text
 from week5_datingnlp_big_data_spark.sources.schemas import SCHEMAS
 
@@ -483,9 +485,7 @@ def streaming_minhash_near_dups(
             bands_new = dedup.band_table(sigs, id_col, num_hashes, num_bands).persist()
             scoped.append(bands_new)
             sh_new = (
-                batch.filter(
-                    F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0
-                )
+                batch.filter(has_content(text_col))
                 .select(
                     F.col(id_col),
                     dedup.word_shingles(text_col, shingle_n).alias("shingles"),
@@ -532,26 +532,8 @@ def streaming_minhash_near_dups(
             )
             sh = sh_all.join(cand_ids, id_col, "left_semi").persist()
             scoped.append(sh)
-            pairs = (
-                cands.join(
-                    sh.withColumnRenamed(id_col, "id_a").withColumnRenamed(
-                        "shingles", "sh_a"
-                    ),
-                    "id_a",
-                )
-                .join(
-                    sh.withColumnRenamed(id_col, "id_b").withColumnRenamed(
-                        "shingles", "sh_b"
-                    ),
-                    "id_b",
-                )
-                .withColumn(
-                    "jaccard",
-                    F.round(dedup.jaccard_similarity(F.col("sh_a"), F.col("sh_b")), 6),
-                )
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard")
-                .withColumn("_batch_id", F.lit(batch_id))
+            pairs = dedup.jaccard_verified(cands, sh, sh, threshold).withColumn(
+                "_batch_id", F.lit(batch_id)
             )
             pairs.write.mode("append").parquet(out_dir)
             bands_new.write.mode("append").parquet(str(root / "bands"))
