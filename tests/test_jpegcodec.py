@@ -174,6 +174,48 @@ def test_zigzag_matches_spec_sequence():
     assert sorted(natural) == list(range(64))
 
 
+def _first_dc(enc: bytes) -> int:
+    """Quantized DC of the first block of a baseline grayscale stream."""
+    i = enc.find(b"\xff\xda")
+    (seg_len,) = struct.unpack_from(">H", enc, i + 2)
+    br = jc._BitReader(enc[i + 2 + seg_len:])
+    s = br.read_symbol(jc.DC_DEC)
+    return jc._extend(br.read_bits(s), s) if s else 0
+
+
+def test_exact_dc_tie_rounds_to_even():
+    # twelve 129s in a block of 128s: S00 = 12/8 = 1.5 exactly and
+    # Q00 = 3 at quality 90, so S00/Q00 = 0.5, a tie np.round sends to
+    # 0; the float DCT gives 0.5000000000000001 on common BLAS kernels
+    img = np.full((8, 8), 128, dtype=np.uint8)
+    img[0, :] = 129
+    img[1, :4] = 129
+    assert jc._quality_table(90)[0, 0] == 3
+    assert _first_dc(jc.encode_jpeg_gray(img, quality=90)) == 0
+
+
+def test_exact_pixel_tie_rounds_to_even():
+    # flat 16 at quality 52: Q00 = 15 and DC = round(-896/15) = -60, so
+    # every decoded pixel is 128 - 60*15/8 = 15.5 exactly: a tie that
+    # rounds to 16 in both decoders; the float IDCT lands below it
+    from week5_datingnlp_big_data_spark.functions import jpegprogressive as jp
+
+    img = np.full((8, 8), 16, dtype=np.uint8)
+    enc = jc.encode_jpeg_gray(img, quality=52)
+    assert _first_dc(enc) == -60
+    assert np.array_equal(jc.decode_jpeg_gray(enc), img)
+    prog = jp.encode_jpeg_progressive(img, quality=52)
+    assert np.array_equal(jc.decode_jpeg(prog), img)
+
+
+def test_exact_dct_coordinates_match_float_basis():
+    # A[u,x]·A[v,y] = Σ_j coords[x,y,u,v,j]·cos(jπ/16) / 32
+    coords = jc._DCT_COORDS.reshape(8, 8, 8, 8, 8)
+    basis = np.cos(np.arange(8) * np.pi / 16)
+    ref = np.einsum("ux,vy->xyuv", jc.DCT_A, jc.DCT_A)
+    assert np.abs(coords @ basis / 32 - ref).max() < 1e-15
+
+
 def test_fill_bytes_and_standalone_markers_tolerated():
     # T.81 §B.1.1.2: any number of 0xFF fill bytes may precede a
     # marker; TEM (0xFF01) is a length-less standalone marker.

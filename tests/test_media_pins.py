@@ -10,7 +10,10 @@ twin checks, so without a pin only their row counts were checked.
   dedup pairs are not SQL-expressible.
 
 Each pin is the row count plus a sha256 over the name-sorted columns and
-the sorted, normalized rows at sf0.001."""
+the sorted, normalized rows at sf0.001. The pins hold on any BLAS kernel:
+the grayscale JPEG paths settle exact .5 rounding ties on the exact DCT
+value (functions/jpegcodec.py), not on the float product, whose last
+ulp depends on the kernel."""
 
 from __future__ import annotations
 
@@ -26,11 +29,11 @@ PINS = {
     "media_audio_stats": (500, "c89840eb449b53df"),
     "media_audio_dup_pairs": (1000, "dde4bcfddb5d1e92"),
     "media_scene_change_stats": (500, "7b205ee3c04eb0d0"),
-    "media_jpeg_decode_stats": (500, "5e3490e349b3555d"),
+    "media_jpeg_decode_stats": (500, "eee9151e777b8510"),
     "media_png_decode_stats": (500, "de8e07ce53b7c951"),
     "media_gif_decode_stats": (500, "aaac0ce18c212536"),
     "media_jpeg_color_stats": (500, "4c5b1a6336eda649"),
-    "media_jpeg_progressive_stats": (500, "0536a3d46e96deda"),
+    "media_jpeg_progressive_stats": (500, "ade2629a5a183fef"),
     "embedding_lsh_join_topk": (40, "91fe01735f03f74b"),
     "embedding_ivf_topk": (40, "0aa1cbb61a4150a9"),
     "embedding_pq_topk": (25, "76808c38469b75a4"),

@@ -15,6 +15,18 @@ The encoders exist so the decoder is testable end to end in-container
 (encode → decode round-trips within quantization + color-convert error;
 at quality 100 the quant tables are all-ones).
 
+Rounding ties: every np.round here rounds half to even. Grayscale
+samples and dequantized coefficients are integers, and then many DCT
+outputs are exact .5 ties (the four u, v ∈ {0, 4} coefficients are
+exact multiples of 1/8). The float product ``A @ block @ A.T`` lands an
+ulp either side of such a tie, and which side depends on the BLAS
+kernel. So the grayscale paths (the baseline and progressive encoders'
+quantization and both decoders' pixels) take every rational transform
+output from exact integer arithmetic (_fdct / _idct with ``exact``):
+an exact tie rounds to even on any host. Irrational outputs are never
+ties and keep the float product. Color planes are float YCbCr and keep
+the float product throughout.
+
 Performance note: entropy decode is a Python bit reader — fine for the
 Arrow-batched test media this engine ships (tiny tiles), and the
 decode-per-payload shape is exactly what a C codec would slot into via
@@ -132,6 +144,62 @@ def _dct_matrix() -> np.ndarray:
 
 
 DCT_A = _dct_matrix()
+
+
+# Exact 2-D DCT of integer blocks, in integer coordinates over the basis
+# cos(jπ/16), j = 0..7 (linearly independent over Q: cos(jπ/16) is a
+# degree-j polynomial in cos(π/16), whose minimal polynomial has degree
+# 8). A[u, x]·A[v, y] = Σ_j _DCT_COORDS[8x+y, 8u+v, j]·cos(jπ/16) / 32,
+# so an output is rational exactly when its coordinates j ≥ 1 vanish.
+# Stored as float64 for the BLAS matmul: entries are integers of size
+# ≤ 4, so for integer inputs below 2^45 in size every product and
+# partial sum is an integer below 2^53, exact in any summation order.
+def _dct_coords() -> np.ndarray:
+    t = np.zeros((8, 8, 8, 8, 8))                       # x, y, u, v, j
+    for x, y, u, v in np.ndindex(8, 8, 8, 8):
+        a, b = (2 * x + 1) * u, (2 * y + 1) * v
+        if u and v:        # (1/4)·cos a·cos b
+            terms, w = (a - b, a + b), 4
+        elif u or v:       # (√2/8)·cos a·cos b, with √2 = 2·cos(4π/16)
+            terms, w = (a - b - 4, a - b + 4, a + b - 4, a + b + 4), 2
+        else:              # 1/8
+            terms, w = (0, 0), 2
+        for m in terms:
+            m = min(m % 32, -m % 32)                      # cos even, 2π-periodic
+            if m < 8:
+                t[x, y, u, v, m] += w
+            elif m > 8:                                   # cos(π − θ) = −cos θ
+                t[x, y, u, v, 16 - m] -= w
+    return t.reshape(64, 64 * 8)
+
+
+_DCT_COORDS = _dct_coords()
+_IDCT_COORDS = (
+    _DCT_COORDS.reshape(64, 64, 8).transpose(1, 0, 2).reshape(64, 64 * 8)
+)
+
+
+def _exact_rationals(out: np.ndarray, block: np.ndarray, coords) -> np.ndarray:
+    """``out``, the float transform of the integer-valued 8x8 ``block``,
+    with each rational output replaced by its exact value. Exact ties of
+    a later np.round are all rational, so they then round to even
+    whatever BLAS kernel computed ``out``."""
+    c = (block.reshape(64) @ coords).reshape(8, 8, 8)
+    return np.where(c[..., 1:].any(axis=-1), out, c[..., 0] / 32.0)
+
+
+def _fdct(block: np.ndarray, exact: bool = False) -> np.ndarray:
+    """2-D DCT of one level-shifted 8x8 block; ``exact`` for
+    integer-valued samples (see the module docstring's tie rule)."""
+    out = DCT_A @ block @ DCT_A.T
+    return _exact_rationals(out, block, _DCT_COORDS) if exact else out
+
+
+def _idct(coef: np.ndarray, exact: bool = False) -> np.ndarray:
+    """2-D inverse DCT of one dequantized 8x8 block (not level-shifted);
+    ``exact`` as for _fdct."""
+    out = DCT_A.T @ coef @ DCT_A
+    return _exact_rationals(out, coef, _IDCT_COORDS) if exact else out
 
 
 def sniff_jpeg(payload: bytes) -> bool:
@@ -254,11 +322,11 @@ def _extend(bits: int, s: int) -> int:
     return bits if bits >= (1 << (s - 1)) else bits - (1 << s) + 1
 
 
-def _encode_block(bw, block, qtbl, dc_enc, ac_enc, prev_dc: int) -> int:
+def _encode_block(bw, block, qtbl, dc_enc, ac_enc, prev_dc: int,
+                  exact: bool = False) -> int:
     """DCT → quantize → zigzag → Huffman one 8x8 block (level-shifted
     input); returns the new DC predictor."""
-    coef = DCT_A @ (block - 128.0) @ DCT_A.T
-    q = np.round(coef / qtbl).astype(np.int64)
+    q = np.round(_fdct(block - 128.0, exact) / qtbl).astype(np.int64)
     seq = [int(q[r, c]) for r, c in ZIGZAG]
     s, bits_v = _magnitude(seq[0] - prev_dc)
     code, length = dc_enc[s]
@@ -337,7 +405,8 @@ def encode_jpeg_gray(
                 prev_dc = 0
             mcu += 1
             prev_dc = _encode_block(
-                bw, padded[by:by + 8, bx:bx + 8], qtbl, DC_ENC, AC_ENC, prev_dc
+                bw, padded[by:by + 8, bx:bx + 8], qtbl, DC_ENC, AC_ENC, prev_dc,
+                exact=True,
             )
     bw.flush()
     out += bw.out
@@ -601,6 +670,7 @@ def _decode_scan(payload, pos, h, w, comps, scan, qtables, dc_dec, ac_dec,
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
     mcu_total = mcux * mcuy
+    gray = len(comps) == 1
     planes = [
         np.zeros((mcuy * c["vs"] * 8, mcux * c["hs"] * 8), dtype=np.float64)
         for c in comps
@@ -643,7 +713,7 @@ def _decode_scan(payload, pos, h, w, comps, scan, qtables, dc_dec, ac_dec,
                     for bx in range(c["hs"]):
                         block, prev_dc[ci] = _decode_block(
                             br, dc_dec[td], ac_dec[ta],
-                            qtables[c["tq"]], prev_dc[ci],
+                            qtables[c["tq"]], prev_dc[ci], gray,
                         )
                         r0 = (my * c["vs"] + by) * 8
                         c0 = (mx * c["hs"] + bx) * 8
@@ -672,7 +742,7 @@ def _finish_planes(planes, comps, h, w):
     return out
 
 
-def _decode_block(br, dc_table, ac_table, qtbl, prev_dc):
+def _decode_block(br, dc_table, ac_table, qtbl, prev_dc, exact=False):
     """Huffman → dezigzag → dequantize → IDCT one 8x8 block; returns
     (level-shifted pixel block, new DC predictor)."""
     s = br.read_symbol(dc_table)
@@ -697,4 +767,4 @@ def _decode_block(br, dc_table, ac_table, qtbl, prev_dc):
     coef = np.zeros((8, 8), dtype=np.float64)
     for i, (r, c) in enumerate(ZIGZAG):
         coef[r, c] = seq[i] * qtbl[r, c]
-    return DCT_A.T @ coef @ DCT_A + 128.0, prev_dc
+    return _idct(coef, exact) + 128.0, prev_dc

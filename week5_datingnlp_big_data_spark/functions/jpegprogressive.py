@@ -57,13 +57,14 @@ from week5_datingnlp_big_data_spark.functions.jpegcodec import (
     DC_BITS_C,
     DC_VALS,
     DC_VALS_C,
-    DCT_A,
     ZIGZAG,
     _BitReader,
     _BitWriter,
     _build_huffman,
     _extend,
+    _fdct,
     _finish_planes,
+    _idct,
     _magnitude,
     _quality_table,
     _quality_table_chroma,
@@ -229,6 +230,7 @@ def _idct_planes(coef, comps, qtables):
     """Vectorized dequantize + IDCT of every accumulated block."""
     # natural-order index of zigzag position k
     nat = np.array([r * 8 + c for r, c in ZIGZAG], dtype=np.int64)
+    gray = len(comps) == 1
     planes = []
     for ci, c in enumerate(comps):
         arr = coef[ci]
@@ -236,17 +238,17 @@ def _idct_planes(coef, comps, qtables):
         blocks = np.zeros((by, bx, 64), dtype=np.float64)
         blocks[:, :, nat] = arr.astype(np.float64)
         blocks = blocks.reshape(by, bx, 8, 8) * qtables[c["tq"]]
-        # per-block 2D matmuls, NOT einsum/stacked-matmul: only the
-        # EXACT operation the baseline decoder runs (`A.T @ coef @ A`
-        # on a 2D array) is guaranteed to round identically at exact-.5
-        # pixel boundaries — stacked kernels reassociate the sums and
-        # flip last-ulp pixels, breaking the cross-path equality the
-        # tests pin. Block count is bounded by the test-tile sizes this
-        # bundled codec exists for.
+        # per-block _idct, NOT einsum/stacked-matmul: only the EXACT
+        # operation the baseline decoder runs is guaranteed to round
+        # identically at exact-.5 pixel boundaries of color planes —
+        # stacked kernels reassociate the sums and flip last-ulp pixels,
+        # breaking the cross-path equality the tests pin (gray planes
+        # take their rational pixels exactly either way). Block count is
+        # bounded by the test-tile sizes this bundled codec exists for.
         pix = np.empty_like(blocks)
         for m in range(by):
             for n in range(bx):
-                pix[m, n] = DCT_A.T @ blocks[m, n] @ DCT_A
+                pix[m, n] = _idct(blocks[m, n], gray)
         pix += 128.0
         planes.append(
             pix.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
@@ -485,15 +487,18 @@ def encode_jpeg_progressive(
             mode="edge",
         )
         blocks = padded.reshape(gy, 8, gx, 8).transpose(0, 2, 1, 3)
-        # per-block 2D DCT — the exact float path of the baseline
-        # encoder (_encode_block), so both modes quantize to IDENTICAL
-        # coefficients and decode to pixel-identical output (stacked
-        # kernels reassociate sums and flip np.round at .5 boundaries)
+        # per-block 2D DCT — the baseline encoder's own _fdct, so both
+        # modes quantize to IDENTICAL coefficients and decode to
+        # pixel-identical output. Gray samples are integers, so their
+        # exact .5 ties are settled on the exact value (exact=True) and
+        # no BLAS kernel flips np.round there; color planes keep the
+        # float product, where stacked kernels would reassociate the
+        # sums and flip np.round at .5 boundaries
         shifted = blocks - 128.0
         dct = np.empty_like(shifted)
         for m in range(gy):
             for n in range(gx):
-                dct[m, n] = DCT_A @ shifted[m, n] @ DCT_A.T
+                dct[m, n] = _fdct(shifted[m, n], gray)
         q = np.round(dct / qtabs[tq]).astype(np.int64)
         zz = np.array([r * 8 + c for r, c in ZIGZAG], dtype=np.int64)
         coef.append(q.reshape(gy, gx, 64)[:, :, zz])
