@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from week5_datingnlp_big_data_spark.functions.text import in_set
+
 # C4's line filter requires a terminal punctuation mark (period,
 # exclamation, question mark, closing quote).
 TERMINAL_PUNCT_PAT = "[.!?”\"']\\s*$"
@@ -252,7 +254,7 @@ def classify_lines(
     words = F.split(line, "\\s+")
     n_words = F.size(words)
     stop_hits = F.size(
-        F.filter(words, lambda w: F.lower(w).isin(*stops))
+        F.filter(words, lambda w: in_set(F.lower(w), stops))
     )
     stopword_ratio = F.round(stop_hits / n_words, 6)
     delinked = F.regexp_replace(line, _ANCHOR_PAT, "")

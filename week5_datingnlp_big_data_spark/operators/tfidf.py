@@ -33,26 +33,21 @@ def inverse_doc_frequency(counts: DataFrame, n_docs: int | None = None) -> DataF
 
     ``n_docs`` defaults to the number of distinct docs in ``counts``
     (matches the reference, where N = corpus size and every doc has ≥1
-    term) — attached as a broadcast 1-row scalar rather than collected
-    to the driver (optimization r8): the old eager ``count()`` executed
-    the whole upstream tokenize pipeline once at CONSTRUCTION time just
-    to inline N as a literal. ``log10(N/df)`` is the same IEEE division
-    of the same exact integers either way."""
-    df_ = counts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    term) — a scalar subquery the action runs, rather than an eager
+    ``count()`` that executed the whole upstream tokenize pipeline once
+    at CONSTRUCTION time just to inline N as a literal. Not a cross join
+    with the 1-row count either: AQE chose that nested-loop join's
+    broadcast side from whichever side's stage finished first, so
+    identical calls got different plans (and could broadcast the
+    vocabulary-sized side). ``log10(N/df)`` is the same IEEE division of
+    the same exact integers either way."""
     if n_docs is None:
-        # no broadcast hint: the side is one row and the planner
-        # broadcasts it from its own estimate (this operator's plan is
-        # pinned hint-free by test_idf_join_adaptive_broadcast_no_forced_hint)
-        nd = counts.agg(
-            F.countDistinct("doc_id").cast("double").alias("_n")
-        )
-        return (
-            df_.crossJoin(nd)
-            .withColumn("idf", F.log10(F.col("_n") / F.col("df")))
-            .drop("_n")
-        )
-    return df_.withColumn(
-        "idf", F.log10(F.lit(float(n_docs)) / F.col("df"))
+        n = counts.agg(F.countDistinct("doc_id").cast("double")).scalar()
+    else:
+        n = F.lit(float(n_docs))
+    return (
+        counts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        .withColumn("idf", F.log10(n / F.col("df")))
     )
 
 

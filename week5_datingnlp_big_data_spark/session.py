@@ -26,6 +26,19 @@ def get_spark(
     - Arrow on: every Pandas UDF (stemmer, vector math) moves batches, not rows.
     - ``spark.sql.shuffle.partitions`` sized to cores locally; AQE coalesces
       down when partitions are small, so oversizing is safe at scale.
+    - Codegen cache of 1000 compiled classes (Spark's default is 100).
+      One pass of the benchmark's ``paper_pipeline`` generates ~145
+      whole-stage and expression classes and one pass of its six
+      ``text_queries`` ~125-170; at 100 entries the LRU evicted each class
+      before its next use, so every repeated call recompiled 120-155
+      classes at ~10 ms each. 1000 holds either working set six times
+      over and leaves room for the other query families; the cache is
+      static (one per JVM), so it is set here, on the builder every
+      session goes through.
+    - Whole-stage classes named without their codegen stage id. AQE
+      numbers pipelines as it plans them, after whichever shuffle
+      finished first, so two identical calls could number the same
+      pipeline 5 and 6, and a class named after its id missed the cache.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
@@ -41,6 +54,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
