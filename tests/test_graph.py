@@ -3,9 +3,11 @@ the div-floor recurrence, ranking invariants, and edge hygiene."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from week5_datingnlp_big_data_spark.operators import graph, relational
+from week5_datingnlp_big_data_spark.operators import bpe, dedup, graph, relational
+from week5_datingnlp_big_data_spark.session import release
 
 
 def _edges(spark, rows):
@@ -440,3 +442,89 @@ def test_label_propagation_tiebreak_is_min_label(spark):
     got3 = {r["node"]: r["community"]
             for r in graph.label_propagation(df, iters=3).collect()}
     assert got3 == got
+
+
+# ------------------------------------ every iterative loop releases
+
+
+def _own_checkpoint(df) -> set:
+    """The RDD id behind ``df`` if its plan is a bare RDD scan, as a
+    local checkpoint's is."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        return {plan.rdd().id()}
+    return set()
+
+
+def _random_graph(spark):
+    """40 nodes, 120 weighted undirected edges, symmetrized (240 rows)."""
+    import random
+
+    rng = random.Random(11)
+    nodes = [f"n{k}" for k in range(40)]
+    pairs = set()
+    while len(pairs) < 120:
+        a, b = rng.sample(nodes, 2)
+        pairs.add((min(a, b), max(a, b), rng.randrange(1, 9)))
+    return _edges(spark, _sym(sorted(pairs)))
+
+
+_ITERATIVE = {
+    "pagerank_int": graph.pagerank_int,
+    "core_numbers": graph.core_numbers,
+    "hits_int": lambda e, **kw: graph.hits_int(e, scale=10**6, **kw),
+    "label_propagation": graph.label_propagation,
+    "connected_components": lambda e, **kw: dedup.connected_components(
+        e, "src", "dst", **kw
+    ),
+    "connected_components_star": lambda e, **kw: dedup.connected_components_star(
+        e, "src", "dst", **kw
+    ),
+}
+
+
+@pytest.mark.parametrize("threshold", [0, 100_000], ids=["distributed", "driver"])
+@pytest.mark.parametrize("name", sorted(_ITERATIVE))
+def test_iterative_operator_leaves_only_its_output(spark, name, threshold):
+    # A distributed path returns its last checkpoint and releases every
+    # other generation; the driver path leaves nothing at all.
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    edges = _random_graph(spark)
+    before = set(persisted().keySet())
+    out = _ITERATIVE[name](edges, driver_threshold_edges=threshold)
+    assert len(out.collect()) == 40
+    left = set(persisted().keySet()) - before
+    own = _own_checkpoint(out) if threshold == 0 else set()
+    release(out)
+    assert left == own
+
+
+def test_bpe_train_leaves_nothing_cached(spark):
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    docs = spark.createDataFrame(
+        [("low lower lowest newer newest wider widest slow slower",)] * 3
+        + [("the newest slower widest lowest",)] * 2,
+        "text string",
+    )
+    before = set(persisted().keySet())
+    merges = bpe.bpe_train(docs, n_merges=20)
+    assert len(merges) > 5  # enough rounds to cut the lineage repeatedly
+    assert set(persisted().keySet()) == before
+
+
+def test_release_frees_checkpoint_or_cache_and_nothing_else(spark):
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    ck = spark.range(50).localCheckpoint(eager=True)
+    assert len(set(persisted().keySet()) - before) == 1
+    release(spark.range(50).selectExpr("id * 2 AS x"))  # unmaterialized
+    release(ck.selectExpr("id * 2 AS x"))  # derived, not the checkpoint
+    assert len(set(persisted().keySet()) - before) == 1
+    assert ck.count() == 50
+    release(ck)
+    assert set(persisted().keySet()) == before
+    cached = spark.range(50).persist()
+    cached.count()
+    assert len(set(persisted().keySet()) - before) == 1
+    release(cached)
+    assert set(persisted().keySet()) == before

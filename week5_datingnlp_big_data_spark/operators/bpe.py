@@ -13,11 +13,8 @@ Per round, entirely JVM-side:
   2. one ``groupBy(pair)`` aggregate + a 1-row ``TakeOrdered`` to the
      driver picks the argmax pair (count desc, pair asc — deterministic);
   3. apply the merge with a greedy-leftmost ``F.aggregate`` fold over
-     each word's symbol array (no Python in the loop).
-
-Lineage is truncated with ``localCheckpoint`` every few rounds (the same
-iterative-plan hazard connected_components handles — see
-operators/dedup.py), and superseded generations are released.
+     each word's symbol array (no Python in the loop), and cut the
+     lineage (``session.cut``).
 
 Scale: word-frequency tables are Zipf-bounded (~10⁷ distinct words for a
 trillion-token corpus) — small relative to the corpus, naturally
@@ -37,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from week5_datingnlp_big_data_spark.functions.text import has_content
+from week5_datingnlp_big_data_spark.session import cut, release
 
 # End-of-word sentinel (classic </w>): lets the vocabulary distinguish
 # "est" in "newest" from the word-final "est</w>" in "smallest".
@@ -127,24 +125,23 @@ def bpe_train(
     n_merges: int = 50,
     text_col: str = "text",
     min_pair_count: int = 2,
-    checkpoint_every: int = 5,
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the ordered
     merge list ``[(left, right, weighted_count), ...]`` — the driver-side
     footprint is exactly one row per merge (the argmax), never the
-    vocabulary. Stops early when no pair reaches ``min_pair_count``."""
-    vocab = (
-        word_frequencies(docs, text_col)
-        .select(_initial_symbols(F.col("word")).alias("symbols"), F.col("cnt"))
-        .persist()
+    vocabulary. Stops early when no pair reaches ``min_pair_count``.
+    Every round cuts the vocabulary's lineage (one more nested
+    ``aggregate`` per merge otherwise), and nothing is left cached."""
+    vocab = cut(
+        word_frequencies(docs, text_col).select(
+            _initial_symbols(F.col("word")).alias("symbols"), F.col("cnt")
+        )
     )
-    vocab.count()  # materialize before the loop
     merges: list[tuple[str, str, int]] = []
-    prev = vocab
     try:
-        for i in range(n_merges):
+        for _ in range(n_merges):
             top = (
-                _pair_counts(prev)
+                _pair_counts(vocab)
                 .orderBy(F.desc("pair_cnt"), F.asc("left"), F.asc("right"))
                 .limit(1)
                 .collect()
@@ -153,24 +150,15 @@ def bpe_train(
                 break
             left, right, cnt = top[0]["left"], top[0]["right"], int(top[0]["pair_cnt"])
             merges.append((left, right, cnt))
-            nxt = prev.select(
-                _merge_pair(F.col("symbols"), left, right).alias("symbols"),
-                F.col("cnt"),
+            vocab = cut(
+                vocab.select(
+                    _merge_pair(F.col("symbols"), left, right).alias("symbols"),
+                    F.col("cnt"),
+                ),
+                vocab,
             )
-            # Truncate the per-round plan growth (k nested aggregates) the
-            # same way connected_components truncates label lineage.
-            if (i + 1) % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-            else:
-                nxt = nxt.persist()
-                nxt.count()
-            if prev is not vocab:
-                prev.unpersist()
-            prev = nxt
     finally:
-        if prev is not vocab:
-            prev.unpersist()
-        vocab.unpersist()
+        release(vocab)
     return merges
 
 

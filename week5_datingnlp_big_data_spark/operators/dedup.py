@@ -18,9 +18,8 @@ verify split REPOSE, ICDE 2021, uses): ``bucket_pairs`` is the one
 candidate self-join (MinHash bands, rare shingles, winnowing
 fingerprints, Hamming blocks, symbol groups, and similarity.py's
 hyperplane signatures and k-means cells), ``jaccard_verified`` the one
-exact-Jaccard verify, and ``_driver_components`` the small-graph escape
-of both connected-components operators. ExactSubstr's two operators
-share ``_sliding_gram_table`` and ``_dup_islands``.
+exact-Jaccard verify. ExactSubstr's two operators share
+``_sliding_gram_table`` and ``_dup_islands``.
 
 Determinism: every hash is md5- or polynomial-derived (no JVM/Python hash
 seeds), so the whole MinHash pipeline is reproducible AND expressible in
@@ -42,7 +41,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from week5_datingnlp_big_data_spark.functions.text import has_content
-from week5_datingnlp_big_data_spark.session import spread
+from week5_datingnlp_big_data_spark.operators.graph import driver_escape
+from week5_datingnlp_big_data_spark.session import cut, release, spread
 
 # Winnowing k-gram hash: Horner polynomial over ASCII char codes. Both
 # constants are mirrored in the DuckDB oracle SQL (registry.py); change
@@ -776,23 +776,6 @@ def mllib_minhash_join(
     )
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the executor storage of a SUPERSEDED localCheckpoint
-    generation. ``DataFrame.unpersist`` cannot reach it — the cached
-    blocks belong to the internal RDD held by the checkpointed plan's
-    LogicalRDD node — so without this, an iterative algorithm accumulates
-    one checkpointed generation per round for the whole session. Only
-    call on DataFrames that nothing downstream references: a local
-    checkpoint has no lineage to recompute from once its blocks are gone.
-    Best-effort (a leaked generation is memory pressure, not wrongness)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def _components_py(edge_rows) -> dict:
     """Union-find (path-halving) over a collected edge list — the
     small-graph execution of both connected-components operators.
@@ -824,16 +807,14 @@ def _components_py(edge_rows) -> dict:
     return {v: roots[find(v)] for v in parent}
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
-    """The small-graph escape of both connected-components operators:
-    collect the materialized two-column edge table, run ``_components_py``
-    on the driver, release the table's checkpoint, and return
-    ``(node, component)`` with the edge table's id type."""
+def _escape_components(edges: DataFrame, threshold: int) -> DataFrame | None:
+    """``graph.driver_escape`` for both connected-components operators:
+    ``edges`` is their checkpointed two-column edge table."""
     node_type = edges.schema[0].dataType.simpleString()
-    comp = _components_py([tuple(r) for r in edges.collect()])
-    _release_local_checkpoint(edges)
-    return edges.sparkSession.createDataFrame(
-        sorted(comp.items()), f"node {node_type}, component {node_type}"
+    return driver_escape(
+        edges, edges.count(), threshold,
+        lambda rows: sorted(_components_py(rows).items()),
+        f"node {node_type}, component {node_type}",
     )
 
 
@@ -854,27 +835,16 @@ def connected_components(
     PAIRS into clusters so one representative (the min id) survives.
 
     Scale: each round is one shuffle join on the node id; the driver only
-    reads a 1-row change count per round (no data collect). Every round
-    ``localCheckpoint``s its result — iterative lineage otherwise grows
-    the logical plan geometrically until planning itself OOMs (persist
-    caches data but does NOT truncate lineage) — and releases the
-    superseded generation's blocks once the change probe has read them.
-    On a cluster where executor loss matters, swap in a reliable
-    ``checkpoint`` dir. For graphs with continent-sized components use
-    ``connected_components_star`` (same signature); for near-dup graphs
-    the plain propagation is the right cost.
+    reads a 1-row change count per round (no data collect), and each
+    round's labels are a ``session.cut`` whose predecessor is released
+    once the change probe has read it. For graphs with continent-sized
+    components use ``connected_components_star`` (same signature); for
+    near-dup graphs the plain propagation is the right cost.
 
-    Coarse-to-fine (optimization r8, same discipline as
-    graph.pagerank_int): the symmetrized edge table is already
-    materialized by its eager checkpoint, so when the graph is at or
-    under ``driver_threshold_edges`` the fixpoint runs driver-side as
-    union-find on the collected edge list — identical (node, component)
-    output (components are a graph invariant, the label contract is the
-    min reachable id) without paying a checkpoint + convergence-probe
-    cluster round trip per propagation round. Driver footprint is
-    bounded by the threshold: the symmetrized table holds 2 rows of 2
-    ids per undirected edge, so ≤ ~4 ids per threshold edge. Set it to
-    0 to force the distributed path.
+    A graph of at most ``driver_threshold_edges`` undirected edges runs
+    union-find on the driver (``graph.driver_escape``): components are a
+    graph invariant and the label contract is the min reachable id, so
+    the output is the same. 0 forces the distributed path.
 
     Output: (node, component) — component = min doc id reachable."""
     # NOTE (optimization r9, tried and rejected): symmetrizing via a
@@ -885,36 +855,34 @@ def connected_components(
     # 1.68→1.67 s, minhash_near_dups 1.47→1.76 s) — the near-dup callers
     # persist the pair table, so the second union arm is a cache read,
     # not a recompute, and the two arms' map sides run in parallel.
-    sym = (
+    sym = cut(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .unionByName(
             edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # ``driver_threshold_edges`` is in CANONICAL undirected edges in both
     # CC variants (ADVICE r8): sym holds 2 rows per undirected edge (plus
     # 1 per self-loop), so compare against twice the threshold — the same
-    # threshold value now engages the escape at the same graph size as
+    # threshold value engages the escape at the same graph size as
     # connected_components_star. Driver footprint ≤ ~4 ids/threshold-edge.
-    if sym.count() <= 2 * driver_threshold_edges:
-        return _driver_components(sym)
-    labels = (
+    small = _escape_components(sym, 2 * driver_threshold_edges)
+    if small is not None:
+        return small
+    labels = cut(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         msgs = sym.join(
             labels, sym.src == labels.node
         ).select(F.col("dst").alias("node"), "component")
-        new_labels = (
+        new_labels = cut(
             labels.unionByName(msgs)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -923,7 +891,7 @@ def connected_components(
             .limit(1)
             .count()
         )
-        _release_local_checkpoint(labels)  # superseded generation
+        release(labels)  # superseded generation
         labels = new_labels
         if changed == 0:
             break
@@ -931,13 +899,14 @@ def connected_components(
         # Silent non-convergence would return multiple "components" for
         # one real cluster AND diverge from the oracle's exact fixpoint —
         # fail loudly instead (a component's diameter exceeded max_iter).
-        _release_local_checkpoint(sym)
+        release(sym)
+        release(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "raise max_iter (diameter of the largest component exceeds it), "
             "or use connected_components_star (O(log²) rounds, any diameter)"
         )
-    _release_local_checkpoint(sym)  # labels no longer references sym
+    release(sym)  # labels no longer references sym
     return labels
 
 
@@ -962,34 +931,28 @@ def connected_components_star(
     minimum of the center's closed neighborhood; small-star links each
     center and its smaller neighbors to that minimum. Each operation is
     one groupBy + one join; the fixpoint is a star forest rooted at every
-    component's min node. Per round: two shuffles, a 1-row
-    (count, hash-sum) convergence probe, a localCheckpoint (lineage
-    truncation), and release of the superseded generation's blocks."""
+    component's min node. Per round: two shuffles, a ``session.cut`` and
+    a 1-row (count, hash-sum) convergence probe. Small graphs take the
+    same driver escape as ``connected_components``."""
     e0 = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).filter(
         F.col("a") != F.col("b")
     )
-    cur = (
+    cur = cut(
         e0.select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # coarse-to-fine: same driver union-find escape as
-    # connected_components (optimization r8) — the canonical edge table
-    # is already materialized, components are a graph invariant, and
-    # the star contraction's cluster round trips dominate under the
-    # threshold. Every node (self-loops were dropped above) appears as
-    # an endpoint of cur, so the collected fixpoint covers the full
-    # node set.
-    if cur.count() <= driver_threshold_edges:
-        return _driver_components(cur)
+    # every node (self-loops were dropped above) is an endpoint of cur,
+    # so the driver's union-find covers the full node set
+    small = _escape_components(cur, driver_threshold_edges)
+    if small is not None:
+        return small
     # node axis derived from the materialized canonical edges — the r8
     # build derived it from e0, which re-ran the (possibly expensive)
     # upstream pair-mining plan a second time for the eager checkpoint
-    nodes = (
+    nodes = cut(
         cur.select(F.col("u").alias("node"))
         .union(cur.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _checksum(e: DataFrame) -> tuple:
@@ -1023,21 +986,24 @@ def connected_components_star(
 
     sig = _checksum(cur)
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-        new_sig = _checksum(nxt)
-        _release_local_checkpoint(cur)
-        cur = nxt
+        cur = cut(_small_star(_large_star(cur)), cur)
+        new_sig = _checksum(cur)
         if new_sig == sig:
             break
         sig = new_sig
     else:
+        release(cur)
+        release(nodes)
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} "
             "rounds (expected O(log² n)); the edge set is still contracting"
         )
     star = cur.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("component"))
-    return nodes.join(star, "node", "left").select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
+    return cut(
+        nodes.join(star, "node", "left").select(
+            "node", F.coalesce("component", F.col("node")).alias("component")
+        ),
+        cur, nodes,
     )
 
 

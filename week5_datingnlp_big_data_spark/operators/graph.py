@@ -21,10 +21,8 @@ and determinism is total.
 Scale shape: each iteration is ONE join (ranks ⨝ edges on src, both
 pre-partitioned on the same key so AQE reuses the layout) and ONE
 aggregation (map-side partial sums absorb high-in-degree hubs before the
-shuffle). Iterations localCheckpoint eagerly — geometric lineage growth
-is the classic iterative-Spark OOM (same discipline as
-dedup.connected_components) — and every superseded generation is
-released immediately.
+shuffle). Every iterative operator here ends each round with
+``session.cut`` and sends small graphs through :func:`driver_escape`.
 
 Overflow bound: rank ≤ scale (total mass never exceeds the initial
 scale), so rank*w stays inside int64 while scale * max_edge_weight
@@ -36,11 +34,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from week5_datingnlp_big_data_spark.operators.dedup import (
-    _release_local_checkpoint,
-)
+from week5_datingnlp_big_data_spark.session import cut, release
 
 PAGERANK_SCALE = 10**9
+
+
+def driver_escape(edges: DataFrame, m: int, threshold: int, twin, schema: str):
+    """The small-graph escape of every iterative graph operator (here and
+    both connected-components operators in dedup.py). ``edges`` is the
+    operator's materialized edge table and ``m`` its row count. An empty
+    table gives the empty ``schema`` frame; a table of at most
+    ``threshold`` rows is collected and ``twin`` (collected rows → output
+    rows) runs the operator on the driver. Either way ``edges`` is
+    released and the frame returned; ``None`` means the graph is large
+    and the caller takes its distributed path, still owning ``edges``.
+
+    Each twin computes the identical integer recurrence or graph
+    invariant, so both paths give the same rows (the tests force the
+    distributed one with ``threshold=0``). Under the threshold the fixed
+    scheduling cost of one cluster round trip per iteration dwarfs the
+    compute, and the driver holds at most ``threshold`` edge rows."""
+    spark = edges.sparkSession
+    if m == 0:
+        out = spark.createDataFrame([], schema)
+    elif m <= threshold:
+        out = spark.createDataFrame(twin(edges.collect()), schema)
+    else:
+        return None
+    release(edges)
+    return out
 
 
 def _pagerank_py(edge_rows, iters: int, scale: int) -> dict:
@@ -74,7 +96,6 @@ def pagerank_int(
     weight: str = "w",
     iters: int = 5,
     scale: int = PAGERANK_SCALE,
-    checkpoint_every: int = 2,
     driver_threshold_edges: int = 100_000,
 ) -> DataFrame:
     """Weighted PageRank, damping 0.85, ``iters`` fixed iterations,
@@ -89,24 +110,9 @@ def pagerank_int(
 
     The node count is materialized once driver-side (a single bounded
     count, same footprint as any fitted-model scalar); edges+out-weights
-    persist across iterations. ``checkpoint_every`` trades lineage depth
-    against blocking materializations: every eager localCheckpoint costs
-    a full job, so truncating each round doubles wall-clock on small
-    iteration budgets, while never truncating re-creates the geometric
-    planning blow-up. Every 2 rounds keeps the plan ≤ 2 join-agg layers
-    deep — both failure modes bounded.
-
-    Coarse-to-fine execution: the edge count is already materialized
-    (the persisted edge table backs every iteration), so when the graph
-    is small — ≤ ``driver_threshold_edges`` after whatever pruning
-    produced it — the recurrence runs driver-side on the collected edge
-    list instead of as 5 distributed join-agg rounds. The integer math
-    is BIT-IDENTICAL on either path (tested by forcing both), the
-    driver footprint is bounded by the threshold (~3 longs/edge ≈ a few
-    MB), and the fixed per-iteration scheduling cost of a cluster round
-    trip — which dwarfs the compute for a pruned keyword graph —
-    disappears. Set ``driver_threshold_edges=0`` to force the
-    distributed path."""
+    persist across iterations. A graph of at most
+    ``driver_threshold_edges`` edges runs on the driver
+    (:func:`driver_escape`); 0 forces the distributed path."""
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
     )
@@ -116,51 +122,40 @@ def pagerank_int(
     # build materialized a separate distinct node table and ran two
     # counts before the branch; for the driver path that node table is
     # never needed at all (optimization r8)
-    spark = edges.sparkSession
     node_type = ew.schema["src"].dataType.simpleString()
     stats = ew.agg(
         F.count(F.lit(1)).alias("m"),
         F.countDistinct("src").alias("n"),
     ).first()
     n, m = stats["n"], stats["m"]
-    if n == 0:
-        ew.unpersist()
-        return spark.createDataFrame([], f"node {node_type}, rank bigint")
-    if m <= driver_threshold_edges:
-        rows = ew.collect()
-        ranks_py = _pagerank_py(
-            [(r["src"], r["dst"], r["w"], r["out_w"]) for r in rows],
-            iters=iters,
-            scale=scale,
-        )
-        ew.unpersist()
-        return spark.createDataFrame(
-            sorted(ranks_py.items()), f"node {node_type}, rank bigint"
-        )
+    small = driver_escape(
+        ew, m, driver_threshold_edges,
+        lambda rows: sorted(_pagerank_py(rows, iters, scale).items()),
+        f"node {node_type}, rank bigint",
+    )
+    if small is not None:
+        return small
     nodes = ew.select(F.col("src").alias("node")).distinct().persist()
     seed = scale // n
     base = ((15 * scale) // 100) // n
     ranks = nodes.select("node", F.lit(seed).cast("bigint").alias("rank"))
-    last_ckpt = None
-    for i in range(iters):
+    for _ in range(iters):
         contrib = ew.join(ranks, ew["src"] == ranks["node"]).select(
             F.col("dst").alias("node"),
             F.expr("(rank * w) div out_w").alias("c"),
         )
         agg = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = nodes.join(agg, "node", "left").select(
-            "node",
-            (
-                F.lit(base) + F.expr("(85 * coalesce(s, 0)) div 100")
-            ).cast("bigint").alias("rank"),
+        ranks = cut(
+            nodes.join(agg, "node", "left").select(
+                "node",
+                (
+                    F.lit(base) + F.expr("(85 * coalesce(s, 0)) div 100")
+                ).cast("bigint").alias("rank"),
+            ),
+            ranks,
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-            if last_ckpt is not None:
-                _release_local_checkpoint(last_ckpt)
-            last_ckpt = ranks
-    ew.unpersist()
-    nodes.unpersist()
+    release(ew)
+    release(nodes)
     return ranks
 
 
@@ -386,18 +381,15 @@ def core_numbers(
     Distributed shape: simultaneous peeling — per round, ONE degree
     aggregation and one anti-join removing every node under the current
     k; when a phase reaches its fixpoint, k advances. Each round is
-    degree-groupBy + broadcastable low-node anti-join; lineage is
-    localCheckpoint-truncated every ``checkpoint_every`` rounds (the
-    iterative-plan discipline of connected_components). Worst case is a
-    long chain (a path graph peels two endpoints per round — O(n) rounds);
-    real co-occurrence graphs peel in a handful of rounds per k.
+    degree-groupBy + broadcastable low-node anti-join, and every peel
+    round cuts the lineage of the edge and alive-node sets. Worst case
+    is a long chain (a path graph peels two endpoints per round — O(n)
+    rounds); real co-occurrence graphs peel in a handful of rounds per k.
 
-    Coarse-to-fine: like pagerank_int, a graph at or under
-    ``driver_threshold_edges`` (known from the canonicalized edge count)
-    peels driver-side via the sequential twin — bit-identical output,
-    because core numbers are a graph invariant, without paying a cluster
-    round trip per peel round. Set the threshold to 0 to force the
-    distributed path."""
+    A graph of at most ``driver_threshold_edges`` canonical edges peels
+    on the driver with the sequential twin (:func:`driver_escape`); core
+    numbers are a graph invariant, so the output is the same. 0 forces
+    the distributed path."""
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -407,19 +399,14 @@ def core_numbers(
         .distinct()
         .persist()
     )
-    m = canon.count()
-    spark = edges.sparkSession
     node_type = canon.schema["u"].dataType.simpleString()
-    if m == 0:
-        canon.unpersist()
-        return spark.createDataFrame([], f"item {node_type}, core bigint")
-    if m <= driver_threshold_edges:
-        rows = canon.collect()
-        canon.unpersist()
-        core = _core_numbers_py([(r["u"], r["v"]) for r in rows])
-        return spark.createDataFrame(
-            sorted(core.items()), f"item {node_type}, core bigint"
-        )
+    small = driver_escape(
+        canon, canon.count(), driver_threshold_edges,
+        lambda rows: sorted(_core_numbers_py(rows).items()),
+        f"item {node_type}, core bigint",
+    )
+    if small is not None:
+        return small
     cur = canon
     # explicit alive-node set: a node whose LAST edge disappears (all
     # neighbors peeled) has degree 0 but no edge rows — computing degrees
@@ -431,12 +418,9 @@ def core_numbers(
         .distinct()
         .persist()
     )
-    alive0 = alive
     k = 1
     done: list[DataFrame] = []
-    last_ckpt = None
-    last_alive = None
-    for it in range(max_iters):
+    for _ in range(max_iters):
         edeg = (
             cur.select(F.col("u").alias("n"))
             .unionAll(cur.select(F.col("v").alias("n")))
@@ -447,65 +431,48 @@ def core_numbers(
             "n", F.coalesce(F.col("d"), F.lit(0)).alias("d")
         ).persist()
         low = deg.filter(F.col("d") < k).select("n").persist()
-        n_low = low.count()
-        if n_low == 0:
+        if low.count() == 0:
             remaining = deg.count()
-            low.unpersist()
-            deg.unpersist()
+            release(low)
+            release(deg)
             if remaining == 0:
                 break
             k += 1
             continue
-        # the assigned set is checkpointed so the final union's plan is
-        # flat (a union over every generation's full lineage is the
-        # geometric-plan OOM this loop otherwise hits)
         done.append(
-            low.select(
-                F.col("n").alias("item"),
-                F.lit(k - 1).cast("bigint").alias("core"),
-            ).localCheckpoint(eager=True)
+            cut(
+                low.select(
+                    F.col("n").alias("item"),
+                    F.lit(k - 1).cast("bigint").alias("core"),
+                )
+            )
         )
-        nxt = (
+        # cut EVERY round: deg references cur AND alive, low references
+        # deg, the next edge set references cur+low — un-truncated, the
+        # plan multiplies ~3x per round and explainString alone OOMs the
+        # driver within ~15 rounds
+        cur = cut(
             cur.join(low.withColumnRenamed("n", "u"), "u", "left_anti")
             .join(low.withColumnRenamed("n", "v"), "v", "left_anti")
-            .select("u", "v")
+            .select("u", "v"),
+            cur,
         )
-        nxt_alive = alive.join(low, "n", "left_anti")
-        # truncate EVERY round: deg references cur AND alive, low
-        # references deg, nxt references cur+low — un-truncated, the
-        # plan multiplies ~3x per round and explainString alone OOMs
-        # the driver within ~15 rounds
-        nxt = nxt.localCheckpoint(eager=True)
-        nxt_alive = nxt_alive.localCheckpoint(eager=True)
-        if last_ckpt is not None:
-            _release_local_checkpoint(last_ckpt)
-        if last_alive is not None:
-            _release_local_checkpoint(last_alive)
-        last_ckpt, last_alive = nxt, nxt_alive
-        if cur is not canon:
-            cur.unpersist()
-        if alive is not alive0:
-            alive.unpersist()
-        deg.unpersist()
-        cur = nxt
-        alive = nxt_alive
+        alive = cut(alive.join(low, "n", "left_anti"), alive)
+        release(low)
+        release(deg)
     else:
+        for df in (cur, alive, *done):
+            release(df)
         raise RuntimeError(
             f"core_numbers did not converge in {max_iters} rounds "
             "(pathological chain graph? raise max_iters)"
         )
-    if cur is not canon:
-        cur.unpersist()
-    if alive is not alive0:
-        alive.unpersist()
-    alive0.unpersist()
-    canon.unpersist()
-    # done entries are localCheckpoint-backed, so the union survives the
-    # unpersists above
+    # one checkpoint of the union keeps the output's plan flat and lets
+    # every per-phase entry go
     out = done[0]
     for d in done[1:]:
         out = out.unionAll(d)
-    return out
+    return cut(out, *done, cur, alive)
 
 
 def _hits_py(edge_rows, iters: int, scale: int) -> dict:
@@ -546,7 +513,6 @@ def hits_int(
     weight: str = "w",
     iters: int = 5,
     scale: int = PAGERANK_SCALE,
-    checkpoint_every: int = 2,
     driver_threshold_edges: int = 100_000,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) in integer arithmetic —
@@ -572,8 +538,7 @@ def hits_int(
 
     Same coarse-to-fine discipline as :func:`pagerank_int`: collected
     driver execution under ``driver_threshold_edges``, else distributed
-    join-agg rounds with periodic localCheckpoint lineage truncation;
-    the integer math is bit-identical on either path."""
+    join-agg rounds; the integer math is bit-identical on either path."""
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"),
         F.col(weight).cast("long").alias("w"),
@@ -581,24 +546,16 @@ def hits_int(
     # one count decides the path (n == 0 ⟺ m == 0 — nodes are edge
     # endpoints); the node table is only built for the distributed
     # path (optimization r8)
-    spark = edges.sparkSession
     node_type = e.schema["src"].dataType.simpleString()
-    m = e.count()
-    if m == 0:
-        e.unpersist()
-        return spark.createDataFrame(
-            [], f"node {node_type}, hub bigint, auth bigint"
-        )
-    if m <= driver_threshold_edges:
-        rows = e.collect()
-        out = _hits_py(
-            [(r["src"], r["dst"], r["w"]) for r in rows], iters, scale
-        )
-        e.unpersist()
-        return spark.createDataFrame(
-            sorted((k, h, a) for k, (h, a) in out.items()),
-            f"node {node_type}, hub bigint, auth bigint",
-        )
+    small = driver_escape(
+        e, e.count(), driver_threshold_edges,
+        lambda rows: sorted(
+            (k, h, a) for k, (h, a) in _hits_py(rows, iters, scale).items()
+        ),
+        f"node {node_type}, hub bigint, auth bigint",
+    )
+    if small is not None:
+        return small
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -607,7 +564,6 @@ def hits_int(
     )
     n = nodes.count()
     hub = nodes.select("node", F.lit(scale // n).cast("bigint").alias("r"))
-    last_ckpt = None
 
     def _norm(raw: DataFrame) -> DataFrame:
         tot = raw.agg(F.sum("raw").alias("t"))
@@ -626,40 +582,32 @@ def hits_int(
             )
         )
 
+    # each half-round reads its source twice (join + total), so an uncut
+    # plan doubles per half-round: cut both every round, authorities
+    # first, since the new hubs read them
     auth = None
-    for i in range(iters):
+    for _ in range(iters):
         araw = (
             e.join(hub, e["src"] == hub["node"])
             .select(F.col("dst").alias("node"), F.expr("w * r").alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("raw"))
         )
-        auth = _norm(araw)
+        auth = cut(_norm(araw), auth)
         hraw = (
             e.join(auth.withColumnRenamed("node", "_an"), e["dst"] == F.col("_an"))
             .select(F.col("src").alias("node"), F.expr("w * r").alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("raw"))
         )
-        hub = _norm(hraw)
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            hub = hub.localCheckpoint(eager=True)
-            auth = auth.localCheckpoint(eager=True)
-            if last_ckpt is not None:
-                for df in last_ckpt:
-                    _release_local_checkpoint(df)
-            last_ckpt = (hub, auth)
-    out = (
+        hub = cut(_norm(hraw), hub)
+    out = cut(
         hub.withColumnRenamed("r", "hub")
-        .join(auth.select("node", F.col("r").alias("auth")), "node")
+        .join(auth.select("node", F.col("r").alias("auth")), "node"),
+        hub, auth,
     )
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
-    nodes.unpersist()
-    if last_ckpt is not None:
-        for df in last_ckpt:
-            if df is not out:
-                _release_local_checkpoint(df)
+    release(e)
+    release(nodes)
     return out
 
 
@@ -700,7 +648,6 @@ def label_propagation(
     dst: str = "dst",
     weight: str = "w",
     iters: int = 4,
-    checkpoint_every: int = 2,
     driver_threshold_edges: int = 100_000,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS weighted label propagation
@@ -764,29 +711,21 @@ def label_propagation(
     sym = sym_pairs.unionByName(selfw).persist()
     # one count decides the path; the node table is only built for the
     # distributed path (optimization r8)
-    spark = edges.sparkSession
     node_type = sym.schema["a"].dataType.simpleString()
-    m = sym.count()
-    if m == 0:
-        sym.unpersist()
-        return spark.createDataFrame(
-            [], f"node {node_type}, community {node_type}"
-        )
-    if m <= driver_threshold_edges:
-        rows = sym.collect()
-        out = _label_prop_py([(r["a"], r["b"], r["w"]) for r in rows], iters)
-        sym.unpersist()
-        return spark.createDataFrame(
-            sorted(out.items()), f"node {node_type}, community {node_type}"
-        )
+    small = driver_escape(
+        sym, sym.count(), driver_threshold_edges,
+        lambda rows: sorted(_label_prop_py(rows, iters).items()),
+        f"node {node_type}, community {node_type}",
+    )
+    if small is not None:
+        return small
     nodes = sym.select(F.col("a").alias("node")).distinct().persist()
-    labels = nodes.select("node", F.col("node").alias("lab"))
-    last_ckpt = None
-    for i in range(iters):
+    labels = nodes.select("node", F.col("node").alias("community"))
+    for _ in range(iters):
         scores = (
             sym.join(
                 labels.select(
-                    F.col("node").alias("b"), F.col("lab").alias("nl")
+                    F.col("node").alias("b"), F.col("community").alias("nl")
                 ),
                 "b",
             )
@@ -794,21 +733,13 @@ def label_propagation(
             .agg(F.sum("w").alias("s"))
         )
         mx = scores.groupBy("node").agg(F.max("s").alias("mxs"))
-        labels = (
+        labels = cut(
             scores.join(mx, "node")
             .filter(F.col("s") == F.col("mxs"))
             .groupBy("node")
-            .agg(F.min("lab").alias("lab"))
+            .agg(F.min("lab").alias("community")),
+            labels,
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            labels = labels.localCheckpoint(eager=True)
-            if last_ckpt is not None:
-                _release_local_checkpoint(last_ckpt)
-            last_ckpt = labels
-    out = labels.select("node", F.col("lab").alias("community"))
-    out = out.localCheckpoint(eager=True)
-    sym.unpersist()
-    nodes.unpersist()
-    if last_ckpt is not None and last_ckpt is not out:
-        _release_local_checkpoint(last_ckpt)
-    return out
+    release(sym)
+    release(nodes)
+    return labels

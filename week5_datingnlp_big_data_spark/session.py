@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -89,3 +90,45 @@ def spread(df, min_partitions: int | None = None):
     if parts < n:
         return df.repartition(n)
     return df
+
+
+def release(df: DataFrame) -> None:
+    """Free the executor blocks behind ``df``: its cache entry if it was
+    persisted, and its blocks if it is a local checkpoint.
+    ``DataFrame.unpersist`` cannot reach the latter — they belong to the
+    internal RDD held by the checkpointed plan's ``LogicalRDD`` node —
+    so without this an iterative loop keeps one generation per round for
+    the whole session. A no-op on any other frame, including one derived
+    from a checkpoint. Only release what nothing live still reads: a
+    local checkpoint has no lineage to recompute from once its blocks
+    are gone. A py4j error (the JVM gone) leaves the blocks in place."""
+    df.unpersist()
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except Py4JError:
+        pass
+
+
+def cut(df: DataFrame, *superseded: DataFrame | None) -> DataFrame:
+    """One round of an iterative loop: materialize ``df`` as an eager
+    ``localCheckpoint`` and release the generations it supersedes.
+
+    Every iterative operator (the graph loops, connected components, BPE
+    training) cuts its lineage this way: a loop's logical plan otherwise
+    nests one more round per iteration until planning itself exhausts
+    the driver (``persist`` caches data but keeps the lineage). Pass
+    every frame the new generation replaces; ``None`` entries are
+    skipped, so a loop can start from nothing. An operator's distributed
+    path returns its last cut, which is the only block set it leaves;
+    ``release`` that frame to free it.
+
+    Local checkpoint blocks are not replicated: if an executor is lost,
+    the blocks it held are lost with it, the job that reads them fails,
+    and the query must be re-run from the start."""
+    out = df.localCheckpoint(eager=True)
+    for old in superseded:
+        if old is not None:
+            release(old)
+    return out
